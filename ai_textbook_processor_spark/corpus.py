@@ -337,10 +337,6 @@ def gen_doc(idx: int, seed: int = 42, family: str | None = None) -> dict:
     }
 
 
-def gen_docs(n: int, seed: int = 42, start: int = 0) -> list[dict]:
-    return [gen_doc(i, seed) for i in range(start, start + n)]
-
-
 def corpus_df(
     spark: SparkSession,
     n_docs: int,

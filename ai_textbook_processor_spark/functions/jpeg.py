@@ -61,11 +61,6 @@ for _u in range(8):
         _C[_u, _x] = 0.5 * cu * np.cos((2 * _x + 1) * _u * np.pi / 16.0)
 
 
-def _idct2(block: np.ndarray) -> np.ndarray:
-    """Exact 2-D type-III DCT of an 8x8 coefficient block."""
-    return _C.T @ block @ _C
-
-
 def _fdct2(block: np.ndarray) -> np.ndarray:
     """Exact 2-D type-II DCT (the encoder's forward transform)."""
     return _C @ block @ _C.T
@@ -1030,12 +1025,13 @@ def _emit_ac_refine(bw, ac_enc, band, al):
     # per-element numpy scalar reads, and an all-below-threshold fast
     # path — such a block's whole emission is a bare EOB0 (every
     # position only grows ``run``; no symbol, no correction bits), and
-    # in the high band most blocks qualify.
+    # in the high band most blocks qualify. An empty band emits nothing,
+    # as the generic path does.
     if hasattr(band, "tolist"):
         band = band.tolist()
-    if (not any(band)) if al == 0 else all(
+    if band and ((not any(band)) if al == 0 else all(
         (v if v >= 0 else -v) >> al == 0 for v in band
-    ):
+    )):
         length, code = ac_enc[0x00]
         bw.write(code, length)
         return

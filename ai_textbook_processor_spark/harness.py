@@ -1451,7 +1451,7 @@ def x2_extract_span_stats(spark, sf_dir):
     from .operators.extract import extract_spans_udf
 
     docs = _interleaved_from_documents(spark, sf_dir)
-    out = docs.withColumn("spans", extract_spans_udf("spans"))
+    out = docs.withColumn("spans", extract_spans_udf()("spans"))
     return (
         out.select(F.explode("spans").alias("s"))
         .groupBy(F.col("s.kind").alias("kind"))

@@ -16,23 +16,26 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-import functools
-
 from pyspark.sql import types as T
 
 from ..functions.kernels import extract_document
 from ..functions.readability import CriteriaConfig, score_texts
 from ..schemas import SPANS_TYPE, VALIDATION_TYPE
+from ..session import udf_per_context
 
 TEXT_KINDS = ("heading", "body", "caption")
 
 
-@F.pandas_udf(SPANS_TYPE)
-def extract_spans_udf(spans: pd.Series) -> pd.Series:
-    return pd.Series(
-        [extract_document(s) if s is not None else [] for s in spans],
-        index=spans.index,
-    )
+@udf_per_context
+def extract_spans_udf():
+    @F.pandas_udf(SPANS_TYPE)
+    def extract_spans(spans: pd.Series) -> pd.Series:
+        return pd.Series(
+            [extract_document(s) if s is not None else [] for s in spans],
+            index=spans.index,
+        )
+
+    return extract_spans
 
 
 # Fused extract+score output: ONE Python stage for the whole hot path.
@@ -51,7 +54,7 @@ EXTRACT_RESULT_TYPE = T.StructType(
 _VALIDATION_FIELDS = [f.name for f in VALIDATION_TYPE.fields]
 
 
-@functools.lru_cache(maxsize=8)
+@udf_per_context
 def make_extract_and_score_udf(cfg: CriteriaConfig):
     @F.pandas_udf(EXTRACT_RESULT_TYPE)
     def extract_and_score(spans: pd.Series) -> pd.DataFrame:
@@ -98,7 +101,9 @@ def make_extract_and_score_udf(cfg: CriteriaConfig):
 # a few KB; finished rows cross coming back, ~1-2 MB/batch at ~GB/s pickle
 # speed, <1% of batch compute). Heavy init happens once per worker process
 # (guide §4.5); PR_SET_PDEATHSIG pins the helper's lifetime to its worker
-# so killed/reused workers never orphan it.
+# so killed/reused workers never orphan it. A helper that dies mid-batch
+# breaks the executor: the task fails with BrokenProcessPool (and Spark
+# retries it) instead of waiting forever on a result that never comes.
 _FUSED_POOL: dict = {}
 _MIN_SPLIT = 128  # below this many ids a batch is not worth forking over
 
@@ -115,14 +120,16 @@ def _helper_pdeathsig():  # pragma: no cover - runs in the forked child
 
 def _get_fused_pool(n_helpers: int):
     import multiprocessing as mp
-    import os
+    from concurrent.futures import ProcessPoolExecutor
 
-    pid = os.getpid()
-    key = (pid, n_helpers)
+    key = (os.getpid(), n_helpers)
     pool = _FUSED_POOL.get(key)
     if pool is None:
-        ctx = mp.get_context("fork")
-        pool = ctx.Pool(n_helpers, initializer=_helper_pdeathsig)
+        pool = ProcessPoolExecutor(
+            n_helpers,
+            mp_context=mp.get_context("fork"),
+            initializer=_helper_pdeathsig,
+        )
         _FUSED_POOL.clear()  # a forked worker must not reuse the parent's
         _FUSED_POOL[key] = pool
     return pool
@@ -230,6 +237,8 @@ def make_generate_extract_score_batch_fn(cfg: CriteriaConfig, seed: int,
     lookahead = os.environ.get("SPARK_GRAFT_FUSED_LOOKAHEAD", "1") != "0"
 
     def generate_extract_score_batches(batches):
+        from concurrent.futures.process import BrokenProcessPool
+
         pool = _get_fused_pool(procs - 1) if procs > 1 else None
 
         def submit(batch):
@@ -240,9 +249,8 @@ def make_generate_extract_score_batch_fn(cfg: CriteriaConfig, seed: int,
                 step = (len(ids) + procs - 1) // procs
                 slices = [ids[i : i + step] for i in range(0, len(ids), step)]
                 pending = [
-                    pool.apply_async(
-                        _fused_compute_batch,
-                        (s, seed, mega_every, cfg, out_fields),
+                    pool.submit(
+                        _fused_compute_batch, s, seed, mega_every, cfg, out_fields
                     )
                     for s in slices[1:]
                 ]
@@ -261,26 +269,30 @@ def make_generate_extract_score_batch_fn(cfg: CriteriaConfig, seed: int,
         cur = next(it, None)
         if cur is None:
             return
-        own, pending = submit(cur)
-        while True:
-            own_result = _fused_compute_batch(
-                own, seed, mega_every, cfg, out_fields
-            )
-            nxt = None
-            if lookahead:
-                nxt = next(it, None)
-                if nxt is not None:
-                    nxt_state = submit(nxt)
-            yield own_result
-            for p in pending:
-                yield p.get()
-            if not lookahead:
-                nxt = next(it, None)
-                if nxt is not None:
-                    nxt_state = submit(nxt)
-            if nxt is None:
-                return
-            own, pending = nxt_state
+        try:
+            own, pending = submit(cur)
+            while True:
+                own_result = _fused_compute_batch(
+                    own, seed, mega_every, cfg, out_fields
+                )
+                nxt = None
+                if lookahead:
+                    nxt = next(it, None)
+                    if nxt is not None:
+                        nxt_state = submit(nxt)
+                yield own_result
+                for p in pending:
+                    yield p.result()
+                if not lookahead:
+                    nxt = next(it, None)
+                    if nxt is not None:
+                        nxt_state = submit(nxt)
+                if nxt is None:
+                    return
+                own, pending = nxt_state
+        except BrokenProcessPool:
+            _FUSED_POOL.clear()  # the task's retry starts new helpers
+            raise
 
     return generate_extract_score_batches
 

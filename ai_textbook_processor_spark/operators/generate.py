@@ -17,13 +17,14 @@ Vectorized like the extractor: one pandas UDF over the extracted text
 
 from __future__ import annotations
 
-import functools
 import re
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import udf_per_context
 
 GEN_TRUNCATE_CHARS = 3000  # config/settings.py:52
 
@@ -127,7 +128,7 @@ def generate_content(text: str, n_items: int = 5) -> dict:
     }
 
 
-@functools.lru_cache(maxsize=2)
+@udf_per_context
 def _gen_udf(n_items: int):
     @F.pandas_udf(GENERATION_TYPE)
     def gen(texts: pd.Series) -> pd.DataFrame:

@@ -201,6 +201,12 @@ def pq_train(
     independent of corpus size."""
     spark = df.sparkSession
 
+    def check_dim(dim: int) -> None:
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+
+    if dim is not None:
+        check_dim(dim)  # before the seed job, not after it
     # seeds: the k_sub smallest ids' subvectors for every subspace from
     # ONE model-sized collect of the full vectors, sliced driver-side
     # (float32 -> float64 widening is exact either side of the boundary).
@@ -212,10 +218,11 @@ def pq_train(
         .select(F.col(vec_col).cast("array<double>").alias("v"))
         .collect()
     )
+    if not seed_rows:
+        raise ValueError("pq_train needs at least one vector; the input frame is empty")
     if dim is None:
         dim = len(seed_rows[0]["v"])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
+        check_dim(dim)
     d = dim // m
 
     # r6: ONE Lloyd loop over the combined (sub, id, subvec) frame instead

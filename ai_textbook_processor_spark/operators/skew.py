@@ -21,8 +21,6 @@ Small docs bypass all of this on the fused single-stage path.
 
 from __future__ import annotations
 
-import functools
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,6 +32,7 @@ from ..operators.extract import TEXT_KINDS, EXTRACT_RESULT_TYPE
 from ..operators.validate import is_valid_expr
 from ..plans.pipeline import extract_documents, with_bucket
 from ..schemas import SPANS_TYPE
+from ..session import udf_per_context
 
 DEFAULT_SPAN_THRESHOLD = 512
 DEFAULT_UNITS_PER_CHUNK = 128
@@ -89,7 +88,7 @@ _PARTIAL_TYPE = T.ArrayType(
 )
 
 
-@functools.lru_cache(maxsize=4)
+@udf_per_context
 def _chunk_udf(max_units: int):
     @F.pandas_udf(_CHUNK_TYPE)
     def chunk(spans: pd.Series) -> pd.Series:
@@ -119,19 +118,23 @@ def _chunk_udf(max_units: int):
     return chunk
 
 
-@F.pandas_udf(_PARTIAL_TYPE)
-def _partial_udf(chunks: pd.Series, media_offsets: pd.Series) -> pd.Series:
-    out = []
-    for chunk, offsets in zip(chunks, media_offsets):
-        partial = extract_text_spans(
-            chunk if chunk is not None else [],
-            list(offsets) if offsets is not None else [],
-        )
-        out.append([{"kind": k, "text": t, "src": s} for k, t, s in partial])
-    return pd.Series(out)
+@udf_per_context
+def _partial_udf():
+    @F.pandas_udf(_PARTIAL_TYPE)
+    def partial(chunks: pd.Series, media_offsets: pd.Series) -> pd.Series:
+        out = []
+        for chunk, offsets in zip(chunks, media_offsets):
+            spans = extract_text_spans(
+                chunk if chunk is not None else [],
+                list(offsets) if offsets is not None else [],
+            )
+            out.append([{"kind": k, "text": t, "src": s} for k, t, s in spans])
+        return pd.Series(out)
+
+    return partial
 
 
-@functools.lru_cache(maxsize=8)
+@udf_per_context
 def _reassemble_udf(cfg: CriteriaConfig):
     @F.pandas_udf(EXTRACT_RESULT_TYPE)
     def reassemble(parts: pd.Series, media: pd.Series) -> pd.DataFrame:
@@ -208,7 +211,7 @@ def extract_documents_salted(
         *_META_COLS,
         F.col("c.chunk_idx").alias("chunk_idx"),
         F.col("c.media").alias("media"),
-        _partial_udf(F.col("c.chunk"), F.col("c.media_offsets")).alias("partial"),
+        _partial_udf()(F.col("c.chunk"), F.col("c.media_offsets")).alias("partial"),
     )
     merged = partials.groupBy("doc_id", *_META_COLS).agg(
         F.array_sort(

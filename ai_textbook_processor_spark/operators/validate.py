@@ -1,9 +1,9 @@
 """Validation operator: readability scoring + valid/quarantine routing.
 
 Spark analog of the reference's validate node + conditional edge
-(``agents/nodes.py:229-270``, ``agents/graph.py:31-42``): the scorer is a
-vectorized pandas UDF producing the ValidationResult-shaped struct; the
-pass/fail conjunction (P6) and the relaxed streaming gate (P7,
+(``agents/nodes.py:229-270``, ``agents/graph.py:31-42``): the scorer
+(``readability.score_texts``) runs inside the extraction stage and emits the
+ValidationResult-shaped struct; the pass/fail conjunction (P6) and the relaxed streaming gate (P7,
 ``routes/route.py:239``) are plain JVM-side boolean expressions so Catalyst
 can push/prune them; the valid/invalid conditional edge becomes a
 DataFrame filter split (P8).
@@ -11,9 +11,6 @@ DataFrame filter split (P8).
 
 from __future__ import annotations
 
-import functools
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -22,25 +19,7 @@ from ..functions.readability import (
     REL_MATCH,
     REL_PARTIAL,
     SAFETY_OK,
-    CriteriaConfig,
-    score_texts,
 )
-from ..schemas import VALIDATION_TYPE
-
-
-@functools.lru_cache(maxsize=8)
-def _make_udf(cfg: CriteriaConfig):
-    @F.pandas_udf(VALIDATION_TYPE)
-    def score_udf(texts: pd.Series) -> pd.DataFrame:
-        out = score_texts(texts, cfg)
-        return out[
-            [
-                "fk_grade", "ttr", "n_words", "n_sentences",
-                "grade_check", "safety_check", "relevance_check", "reason",
-            ]
-        ]
-
-    return score_udf
 
 
 def is_valid_expr(validation_col: str = "validation", relaxed: bool = False) -> Column:
@@ -53,24 +32,6 @@ def is_valid_expr(validation_col: str = "validation", relaxed: bool = False) -> 
     )
     return (
         (v["grade_check"] == GRADE_OK) & (v["safety_check"] == SAFETY_OK) & rel
-    )
-
-
-def with_validation(
-    df: DataFrame,
-    text_col: Column,
-    cfg: CriteriaConfig | None = None,
-    validation_col: str = "validation",
-) -> DataFrame:
-    cfg = cfg or CriteriaConfig()
-    udf = _make_udf(cfg)
-    # P3 pushed down: the reference validates only a 1000-char prefix
-    # (agents/nodes.py:136). Truncating JVM-side BEFORE the UDF keeps the
-    # Arrow transfer to Python O(prefix), not O(document) — measured 8x on
-    # a mega-doc corpus. score_texts re-truncates internally (idempotent).
-    truncated = F.substring(text_col, 1, cfg.truncate_chars)
-    return df.withColumn(validation_col, udf(truncated)).withColumn(
-        "is_valid", is_valid_expr(validation_col, relaxed=cfg.relaxed_relevance)
     )
 
 

@@ -197,6 +197,10 @@ def _stages_from_extracted(
     import os as _os
 
     _mode = _os.environ.get("SPARK_GRAFT_SPREAD_WINNERS", "ckpt")
+    if _mode not in ("0", "1", "ckpt"):
+        raise ValueError(
+            f"SPARK_GRAFT_SPREAD_WINNERS={_mode!r}: expected '0', '1' or 'ckpt'"
+        )
     if _mode in ("1", "ckpt"):
         n_spread = int(spark.conf.get("spark.sql.shuffle.partitions"))
         winners = winners.repartition(n_spread)

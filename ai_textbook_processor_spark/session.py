@@ -7,8 +7,10 @@ partitions sized to cores (not 200), Arrow enabled with a bounded batch size
 
 from __future__ import annotations
 
+import functools
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Docs are fat rows (a mega-doc can be MBs); cap Arrow batches below the
@@ -28,6 +30,39 @@ ARROW_MAX_RECORDS_PER_BATCH_MANY_LANES = 8192
 # JVM); task.cpus=2 recovers ~14k docs/s. On a real cluster the same
 # setting is the standard sizing for Python-heavy stages.
 TASK_CPUS_THRESHOLD = 16
+
+# Every Python worker forks from this daemon, which imports the installed
+# pyspark and the engine's worker modules once and freezes that heap, so a
+# task does not pay the imports, zip re-reads and full GC walks (_daemon.py).
+DAEMON_MODULE = "ai_textbook_processor_spark._daemon"
+# The sys.path entry this package was imported from: the checkout, or the
+# zip spark-submit --py-files put on the driver's path.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def udf_per_context(factory):
+    """Memoize a pandas-UDF factory per active SparkContext.
+
+    A UDF keeps the JVM function it builds on first use, and that function
+    holds the accumulator of the SparkContext active then. Reused under a
+    later context, every task's accumulator update fails (the DAGScheduler
+    logs "Failed to update accumulator"), so the memo starts over whenever
+    the active context changes."""
+    memo: dict = {}
+    owner = None
+
+    @functools.wraps(factory)
+    def build(*args):
+        nonlocal owner
+        sc = SparkContext._active_spark_context
+        if owner is not sc:
+            memo.clear()
+            owner = sc
+        if args not in memo:
+            memo[args] = factory(*args)
+        return memo[args]
+
+    return build
 
 
 def get_spark(
@@ -85,6 +120,13 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
+    if effective.startswith("local"):
+        # Local workers share the driver's files, so the daemon module is
+        # importable from PACKAGE_ROOT before any --py-files are unpacked.
+        # On a cluster it would have to be installed on every executor.
+        b = b.config("spark.python.daemon.module", DAEMON_MODULE).config(
+            "spark.executorEnv.PYTHONPATH", PACKAGE_ROOT
+        )
     task_cpus = os.environ.get("SPARK_GRAFT_TASK_CPUS")
     if task_cpus:
         b = b.config("spark.task.cpus", task_cpus)

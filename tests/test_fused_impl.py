@@ -110,3 +110,57 @@ def test_fused_parallel_helper_equals_serial(spark):
     ser = extract_documents(docs, impl="fused").collect()
     assert len(par) == len(ser) == 520
     assert par == ser
+
+
+def test_killed_fork_helper_raises_instead_of_hanging():
+    """A SIGKILLed fork helper fails the batch function with
+    BrokenProcessPool (a Spark task retry) within a bounded time; it does
+    not wait forever on the slice the helper was computing."""
+    import multiprocessing as mp
+    import os
+    import signal
+    import threading
+    from concurrent.futures.process import BrokenProcessPool
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from ai_textbook_processor_spark.operators.extract import (
+        EXTRACT_RESULT_TYPE,
+        make_generate_extract_score_batch_fn,
+    )
+    from ai_textbook_processor_spark.schemas import DOCUMENTS_SCHEMA
+
+    result = {f.name: f.dataType for f in EXTRACT_RESULT_TYPE.fields}
+    out_fields = [(f.name, to_arrow_type(f.dataType)) for f in DOCUMENTS_SCHEMA.fields] + [
+        (n, to_arrow_type(result[n])) for n in ("n_spans", "n_chars", "validation")
+    ]
+    fn = make_generate_extract_score_batch_fn(CriteriaConfig(), 3, 0, out_fields, procs=2)
+    batches = [
+        pa.RecordBatch.from_arrays([pa.array(range(k, k + 512), pa.int64())], ["id"])
+        for k in range(0, 8 * 512, 512)
+    ]
+    outcome = {}
+
+    def consume():
+        # the helpers' parent is this thread (PR_SET_PDEATHSIG), so the
+        # pool is created, killed and drained here
+        try:
+            it = fn(iter(batches))
+            outcome["first"] = next(it).num_rows
+            helpers = mp.active_children()
+            outcome["helpers"] = len(helpers)
+            for h in helpers:
+                os.kill(h.pid, signal.SIGKILL)
+            for _ in it:
+                pass
+        except BrokenProcessPool as e:
+            outcome["error"] = e
+
+    t = threading.Thread(target=consume, daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "batch function hung on a dead helper"
+    assert outcome.get("first") == 256
+    assert outcome.get("helpers") == 1
+    assert isinstance(outcome.get("error"), BrokenProcessPool)

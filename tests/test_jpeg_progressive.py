@@ -356,3 +356,25 @@ def test_progressive_fixture_packer_matches_baseline_twin():
         base = baseline_twin_of_progressive(aid, n)
         assert prog[:4] == b"\xff\xd8\xff\xdb" and b"\xff\xc2" in prog[:700]
         assert decode_jpeg(prog) == decode_jpeg(base)
+
+
+def test_ac_refine_empty_band_emits_nothing():
+    """The all-below-threshold fast path is a strict subset of the generic
+    refinement path: an all-zero band emits one bare EOB0, an empty band
+    (a zero-width spectral selection) emits nothing at all."""
+    from ai_textbook_processor_spark.functions.jpeg import _emit_ac_refine
+
+    class Rec:
+        def __init__(self):
+            self.writes = []
+
+        def write(self, v, n):
+            self.writes.append((v, n))
+
+    ac_enc = {0x00: (4, 0b1010)}
+    for al in (0, 1):
+        zeros, empty = Rec(), Rec()
+        _emit_ac_refine(zeros, ac_enc, np.zeros(5, dtype=np.int32), al)
+        _emit_ac_refine(empty, ac_enc, np.zeros(0, dtype=np.int32), al)
+        assert zeros.writes == [(0b1010, 4)]
+        assert empty.writes == []

@@ -347,3 +347,23 @@ def test_ivfpq_sweep_recall_monotone(spark):
         pure = {i for i, _ in _ivfpq_pure(sf, n_probe=n_probe)}
         assert n_hit == len(pure & brute)
         assert recall == round(n_hit / 10.0, 2)
+
+
+def test_pq_train_rejects_bad_dim_before_any_job_and_empty_input(spark):
+    import pytest
+
+    from ai_textbook_processor_spark.operators.similarity import pq_train
+
+    class NoJobs:
+        """A frame stand-in that fails if pq_train starts the seed job."""
+
+        sparkSession = spark
+
+        def orderBy(self, *cols):
+            raise AssertionError("the seed job ran before the dim check")
+
+    with pytest.raises(ValueError, match="not divisible by m=3"):
+        pq_train(NoJobs(), m=3, dim=8)
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="empty"):
+        pq_train(empty, m=4, k_sub=2)

@@ -422,3 +422,13 @@ def test_dsir_stage_keeps_target_plus_topk(spark):
         for r in w.orderBy(F.col("logw").desc(), "doc_id").collect()
     ]
     assert kept - kept_target == set(ranked[:k])
+
+
+def test_spread_winners_rejects_unknown_value(spark, monkeypatch):
+    """A typo in the A/B toggle raises instead of silently falling back to
+    the serialized MinHash stage."""
+    import pytest
+
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_WINNERS", "true")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SPREAD_WINNERS"):
+        clean_corpus(corpus_df(spark, 4, seed=3), CriteriaConfig())

@@ -6,8 +6,10 @@ and flags warm stages whose executorRunTime is large but which ran with
 single-row-group scan (the txt_quality / qc / semdedup class of problem,
 guide §2: parallelism that silently collapses to one task).
 
-Stage attribution is snapshot-based (stages completed between the two
-runs), so run it alone, not concurrently with other Spark work.
+Each run is submitted under its own Spark job group, and a run's stages
+are those of the jobs in its group (read from the driver's status store
+once the listener bus has drained), so Spark work outside the run cannot
+be attributed to it.
 
 Usage: python tools/audit_stage_parallelism.py [SF_DIR] [MIN_MS] [ONLY,..]
 """
@@ -33,19 +35,29 @@ def main() -> int:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="audit_stage_parallelism",
                       master=f"local[{cpus}]", shuffle_partitions=cpus)
-    store = spark._jsparkSession.sparkContext().statusStore()
-    jvm = spark._jvm
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
 
-    def stages_snapshot():
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def group_stages(group):
+        """(stage id, attempt) -> (completed tasks, executorRunTime ms) of
+        every stage that ran for a job in ``group``."""
+        jsc.listenerBus().waitUntilEmpty()
+        store = jsc.statusStore()
         out = {}
-        empty = jvm.java.util.ArrayList()
-        quant = spark._sc._gateway.new_array(jvm.double, 0)
-        it = store.stageList(empty, False, False, quant, empty).iterator()
-        while it.hasNext():
-            s = it.next()
-            out[(int(s.stageId()), int(s.attemptId()))] = (
-                int(s.numCompleteTasks()), int(s.executorRunTime()),
-            )
+        for job in seq(store.jobsList(None)):
+            g = job.jobGroup()
+            if not (g.isDefined() and g.get() == group):
+                continue
+            for sid in seq(job.stageIds()):
+                for st in seq(store.stageData(sid, False, None, False, no_quantiles)):
+                    if st.status().toString() != "SKIPPED":
+                        out[(sid, st.attemptId())] = (
+                            int(st.numCompleteTasks()), int(st.executorRunTime()),
+                        )
         return out
 
     def noop(df):
@@ -54,19 +66,17 @@ def main() -> int:
     flagged_total = 0
     for name in names:
         try:
+            sc.setJobGroup(f"audit-{name}-cold", name)
             noop(harness.QUERIES[name](spark, sf_dir))  # cold warm-up
         except Exception as e:
             print(f"{name:28s} ERR {repr(e)[:70]}")
             continue
-        time.sleep(1)
-        before = set(stages_snapshot())
+        group = f"audit-{name}-warm"
+        sc.setJobGroup(group, name)
         t0 = time.monotonic()
         noop(harness.QUERIES[name](spark, sf_dir))
         dt = time.monotonic() - t0
-        time.sleep(1)
-        new = {
-            k: v for k, v in stages_snapshot().items() if k not in before
-        }
+        new = group_stages(group)
         flags = [
             (k[0], v) for k, v in new.items()
             if v[1] >= min_ms and v[0] <= 2
