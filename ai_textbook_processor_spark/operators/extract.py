@@ -106,6 +106,7 @@ def make_extract_and_score_udf(cfg: CriteriaConfig):
 # retries it) instead of waiting forever on a result that never comes.
 _FUSED_POOL: dict = {}
 _MIN_SPLIT = 128  # below this many ids a batch is not worth forking over
+_HELPER_POLL_S = 1.0  # how often a wait for a helper's slice checks it lives
 
 
 def _helper_pdeathsig():  # pragma: no cover - runs in the forked child
@@ -133,6 +134,42 @@ def _get_fused_pool(n_helpers: int):
         _FUSED_POOL.clear()  # a forked worker must not reuse the parent's
         _FUSED_POOL[key] = pool
     return pool
+
+
+def _helper_result(pool, fut):
+    """``fut.result()``, but a dead helper raises BrokenProcessPool within
+    _HELPER_POLL_S. The executor notices a dead helper by itself unless the
+    helper died half-way through writing its result: its manager thread
+    then blocks on the half-written message and the future never completes
+    (CPython 3.11)."""
+    from concurrent.futures import TimeoutError as FutureTimeout
+    from concurrent.futures.process import BrokenProcessPool
+
+    while True:
+        try:
+            return fut.result(timeout=_HELPER_POLL_S)
+        except FutureTimeout:
+            helpers = list((pool._processes or {}).values())
+            if any(p.exitcode is not None for p in helpers):
+                raise BrokenProcessPool(
+                    "a fused fork helper died before returning its slice"
+                ) from None
+
+
+def _drop_fused_pool():
+    """Forget this process's helpers after one died, leaving nothing that
+    waits on them: the survivors are killed, and this process's end of the
+    result pipe is closed, so a manager thread stuck on a half-written
+    result reads EOF and exits (it would otherwise block interpreter exit).
+    A module-level function, so a pickled batch function clears this
+    module's cache, not a copy of it."""
+    for pool in _FUSED_POOL.values():
+        for p in list((pool._processes or {}).values()):
+            p.kill()
+        if pool._result_queue is not None:
+            pool._result_queue._writer.close()
+        pool.shutdown(wait=False, cancel_futures=True)
+    _FUSED_POOL.clear()
 
 
 def _fused_compute_batch(ids, seed: int, mega_every: int, cfg: CriteriaConfig,
@@ -282,7 +319,7 @@ def make_generate_extract_score_batch_fn(cfg: CriteriaConfig, seed: int,
                         nxt_state = submit(nxt)
                 yield own_result
                 for p in pending:
-                    yield p.result()
+                    yield _helper_result(pool, p)
                 if not lookahead:
                     nxt = next(it, None)
                     if nxt is not None:
@@ -291,7 +328,7 @@ def make_generate_extract_score_batch_fn(cfg: CriteriaConfig, seed: int,
                     return
                 own, pending = nxt_state
         except BrokenProcessPool:
-            _FUSED_POOL.clear()  # the task's retry starts new helpers
+            _drop_fused_pool()  # the task's retry starts new helpers
             raise
 
     return generate_extract_score_batches

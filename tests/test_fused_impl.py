@@ -112,55 +112,137 @@ def test_fused_parallel_helper_equals_serial(spark):
     assert par == ser
 
 
-def test_killed_fork_helper_raises_instead_of_hanging():
-    """A SIGKILLed fork helper fails the batch function with
-    BrokenProcessPool (a Spark task retry) within a bounded time; it does
-    not wait forever on the slice the helper was computing."""
-    import multiprocessing as mp
-    import os
-    import signal
-    import threading
-    from concurrent.futures.process import BrokenProcessPool
+# Fork helpers are forked from the calling process, so the helper-death
+# scenarios run in a child interpreter: nothing is forked from the test
+# process (which holds the JVM gateway's threads), a helper left behind
+# cannot leak into later tests, and the child exiting at all shows that no
+# pool thread blocks interpreter exit.
+_KILL_SCRIPT = r"""
+import json
+import multiprocessing as mp
+import os
+import signal
+import sys
+import time
+from concurrent.futures.process import BrokenProcessPool
 
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_type
 
-    from ai_textbook_processor_spark.operators.extract import (
-        EXTRACT_RESULT_TYPE,
-        make_generate_extract_score_batch_fn,
-    )
-    from ai_textbook_processor_spark.schemas import DOCUMENTS_SCHEMA
+from ai_textbook_processor_spark.functions.readability import CriteriaConfig
+from ai_textbook_processor_spark.operators import extract
+from ai_textbook_processor_spark.schemas import DOCUMENTS_SCHEMA
 
-    result = {f.name: f.dataType for f in EXTRACT_RESULT_TYPE.fields}
+out = {}
+if sys.argv[1] == "batch_fn":
+    # a SIGKILLed helper fails the batch function; it does not wait forever
+    # on the slice the helper was computing
+    result = {f.name: f.dataType for f in extract.EXTRACT_RESULT_TYPE.fields}
     out_fields = [(f.name, to_arrow_type(f.dataType)) for f in DOCUMENTS_SCHEMA.fields] + [
         (n, to_arrow_type(result[n])) for n in ("n_spans", "n_chars", "validation")
     ]
-    fn = make_generate_extract_score_batch_fn(CriteriaConfig(), 3, 0, out_fields, procs=2)
+    fn = extract.make_generate_extract_score_batch_fn(CriteriaConfig(), 3, 0, out_fields, procs=2)
     batches = [
         pa.RecordBatch.from_arrays([pa.array(range(k, k + 512), pa.int64())], ["id"])
         for k in range(0, 8 * 512, 512)
     ]
-    outcome = {}
+    it = fn(iter(batches))
+    out["first"] = next(it).num_rows
+    helpers = mp.active_children()
+    out["helpers"] = len(helpers)
+    for h in helpers:
+        os.kill(h.pid, signal.SIGKILL)
+    try:
+        for _ in it:
+            pass
+    except BrokenProcessPool:
+        out["error"] = "BrokenProcessPool"
+else:
+    # a helper killed half-way through writing its result: the executor's
+    # manager thread blocks on the half-written message, so only the
+    # liveness poll sees the death, and dropping the pool must release
+    # that thread
+    pool = extract._get_fused_pool(1)
+    assert pool.submit(int, "1").result() == 1
+    manager = pool._executor_manager_thread
+    # a message header announcing 1000 bytes, followed by only 10 of them
+    os.write(pool._result_queue._writer.fileno(), (1000).to_bytes(4, "big") + b"x" * 10)
+    fut = pool.submit(int, "2")
+    (helper,) = mp.active_children()
+    os.kill(helper.pid, signal.SIGKILL)
+    t0 = time.monotonic()
+    try:
+        extract._helper_result(pool, fut)
+    except BrokenProcessPool:
+        out["error"] = "BrokenProcessPool"
+    out["raised_within_s"] = time.monotonic() - t0 < 10
+    extract._drop_fused_pool()
+    manager.join(timeout=30)
+    out["manager_exited"] = not manager.is_alive()
+out["cached_pools"] = len(extract._FUSED_POOL)
+print(json.dumps(out))
+"""
 
-    def consume():
-        # the helpers' parent is this thread (PR_SET_PDEATHSIG), so the
-        # pool is created, killed and drained here
-        try:
-            it = fn(iter(batches))
-            outcome["first"] = next(it).num_rows
-            helpers = mp.active_children()
-            outcome["helpers"] = len(helpers)
-            for h in helpers:
-                os.kill(h.pid, signal.SIGKILL)
-            for _ in it:
-                pass
-        except BrokenProcessPool as e:
-            outcome["error"] = e
 
-    t = threading.Thread(target=consume, daemon=True)
-    t.start()
-    t.join(timeout=120)
-    assert not t.is_alive(), "batch function hung on a dead helper"
-    assert outcome.get("first") == 256
-    assert outcome.get("helpers") == 1
-    assert isinstance(outcome.get("error"), BrokenProcessPool)
+def _run_kill_scenario(name: str) -> dict:
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
+    proc = subprocess.run(
+        [sys.executable, "-c", _KILL_SCRIPT, name],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_killed_fork_helper_raises_instead_of_hanging():
+    """A SIGKILLed fork helper fails the batch function with
+    BrokenProcessPool (a Spark task retry) within a bounded time, and the
+    dead pool is dropped so the retry starts new helpers."""
+    assert _run_kill_scenario("batch_fn") == {
+        "first": 256,
+        "helpers": 1,
+        "error": "BrokenProcessPool",
+        "cached_pools": 0,
+    }
+
+
+def test_helper_killed_mid_result_raises_and_releases_the_pool():
+    """A helper killed while writing its result leaves the executor's
+    manager thread blocked on a half-written message; the wait still
+    raises BrokenProcessPool, and dropping the pool ends that thread."""
+    assert _run_kill_scenario("mid_result") == {
+        "error": "BrokenProcessPool",
+        "raised_within_s": True,
+        "manager_exited": True,
+        "cached_pools": 0,
+    }
+
+
+def test_batch_fn_pickles_without_the_helper_cache():
+    """The batch function reaches the helper cache only through module-level
+    functions, so pickling it for Spark never copies a cached pool (which
+    holds locks and threads), and a worker's cleanup clears its real cache."""
+    import threading
+
+    from pyspark import cloudpickle
+
+    from ai_textbook_processor_spark.operators import extract
+
+    fn = extract.make_generate_extract_score_batch_fn(CriteriaConfig(), 3, 0, [], procs=2)
+    key = ("unpicklable", 0)
+    extract._FUSED_POOL[key] = threading.Lock()
+    try:
+        cloudpickle.dumps(fn)
+    finally:
+        del extract._FUSED_POOL[key]
