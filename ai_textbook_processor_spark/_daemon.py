@@ -5,12 +5,18 @@ Spark forks every Python worker of an executor from one daemon process
 done in the daemon before it starts forking is paid once per executor
 instead of once per task:
 
-1. pyspark and py4j load from site-packages, not from the
-   ``$SPARK_HOME/python/lib`` zips Spark puts first on the workers' path, when
-   the installed pyspark is the same version as the zip's. On Python 3.11
-   every task's ``importlib.invalidate_caches()`` re-reads the 1,328-entry
-   ``pyspark.zip`` directory once per cached zipimporter: 14 of them when
-   pyspark loads from the zip (about 0.11 s/task), 2 when it does not.
+1. The workers' ``sys.path`` loses every archive they need not search, and
+   the daemon forgets the zip importers its own start-up cached for them.
+   Spark puts ``pyspark.zip``, the py4j zip and the spark-core jar (5,359
+   entries, no Python) first on a worker's path. On Python 3.11 each task's
+   ``importlib.invalidate_caches()`` re-reads the directory of every cached
+   zip importer: with the zips merely moved behind site-packages, four of
+   them (the jar twice, as ``<jar>`` and ``<jar>/org``) cost a 0.099 s
+   median (0.06-0.14 s) per task inside a local[4] worker. A Spark lib zip
+   is dropped when the rest of the path holds its package (pyspark or
+   py4j) at the zip's version; an archive with no ``.py`` or ``.pyc`` is
+   always dropped. With no zip importer left the call takes 0.11 ms
+   (BENCH/boundary_ab.json).
 2. The engine's worker-side modules are imported (``operators.skew`` pulls in
    extract, kernels, readability and pipeline, with pandas and pyarrow).
 3. ``gc.freeze()`` moves those import-time objects out of the collector's
@@ -30,6 +36,7 @@ import zipfile
 from importlib.machinery import PathFinder
 
 _VERSION_RE = re.compile(r"""__version__(?:\s*:\s*str)?\s*=\s*['"]([^'"]+)['"]""")
+_SPARK_PACKAGES = ("pyspark", "py4j")
 
 
 def _version_of(source: str) -> str | None:
@@ -37,16 +44,27 @@ def _version_of(source: str) -> str | None:
     return m.group(1) if m else None
 
 
-def _zip_pyspark_version(zip_path: str) -> str | None:
+def _archive_names(entry: str) -> list[str] | None:
+    """Member names of a zip or jar path entry; None if it is not one."""
+    if not os.path.isfile(entry):
+        return None
+    try:
+        with zipfile.ZipFile(entry) as z:
+            return z.namelist()
+    except (OSError, zipfile.BadZipFile):
+        return None
+
+
+def _zip_version(zip_path: str, package: str) -> str | None:
     try:
         with zipfile.ZipFile(zip_path) as z:
-            return _version_of(z.read("pyspark/version.py").decode())
+            return _version_of(z.read(f"{package}/version.py").decode())
     except (OSError, KeyError, zipfile.BadZipFile):
         return None
 
 
-def _installed_pyspark_version(path: list[str]) -> str | None:
-    spec = PathFinder.find_spec("pyspark", path)
+def _installed_version(package: str, path: list[str]) -> str | None:
+    spec = PathFinder.find_spec(package, path)
     if spec is None or not spec.submodule_search_locations:
         return None
     version_py = os.path.join(list(spec.submodule_search_locations)[0], "version.py")
@@ -57,26 +75,42 @@ def _installed_pyspark_version(path: list[str]) -> str | None:
         return None
 
 
-def prefer_installed_pyspark(path: list[str], spark_home: str | None) -> list[str]:
-    """``path`` with the ``$SPARK_HOME/python/lib`` zips moved behind every
-    other entry, if the pyspark those other entries hold is the version the
-    zip holds; otherwise ``path`` unchanged."""
-    if not spark_home:
-        return list(path)
-    lib = os.path.realpath(os.path.join(spark_home, "python", "lib"))
-    zips = [p for p in path if p.endswith(".zip") and os.path.dirname(os.path.realpath(p)) == lib]
-    spark_zip = next((p for p in zips if os.path.basename(p) == "pyspark.zip"), None)
-    rest = [p for p in path if p not in zips]
-    if spark_zip is None:
-        return list(path)
-    zip_version = _zip_pyspark_version(spark_zip)
-    if zip_version is None or _installed_pyspark_version(rest) != zip_version:
-        return list(path)
-    return rest + zips
+def trim_worker_path(path: list[str], spark_home: str | None) -> list[str]:
+    """``path`` without the archives a worker need not search, in the same
+    order: every zip or jar that holds no ``.py`` or ``.pyc``, and each
+    ``$SPARK_HOME/python/lib`` zip whose package (pyspark or py4j) the
+    remaining entries provide at the zip's version."""
+    archives = {p: names for p in dict.fromkeys(path) if (names := _archive_names(p)) is not None}
+    dropped = {
+        p for p, names in archives.items()
+        if not any(n.endswith((".py", ".pyc")) for n in names)
+    }
+    spark_zips = []
+    if spark_home:
+        lib = os.path.realpath(os.path.join(spark_home, "python", "lib"))
+        spark_zips = [p for p in archives if os.path.dirname(os.path.realpath(p)) == lib]
+    rest = [p for p in path if p not in dropped and p not in spark_zips]
+    for z in spark_zips:
+        for package in _SPARK_PACKAGES:
+            version = _zip_version(z, package)
+            if version is not None and version == _installed_version(package, rest):
+                dropped.add(z)
+    return [p for p in path if p not in dropped]
+
+
+def forget_importers(dropped: set[str]) -> None:
+    """Delete the cached path importers of ``dropped`` entries and of any
+    path inside them (``<jar>/org``): ``importlib.invalidate_caches()``
+    re-reads every cached zip importer, on the path or not."""
+    for key in list(sys.path_importer_cache):
+        if any(key == d or key.startswith(d + os.sep) for d in dropped):
+            del sys.path_importer_cache[key]
 
 
 if __name__ == "__main__":
-    sys.path[:] = prefer_installed_pyspark(sys.path, os.environ.get("SPARK_HOME"))
+    kept = trim_worker_path(sys.path, os.environ.get("SPARK_HOME"))
+    forget_importers(set(sys.path) - set(kept))
+    sys.path[:] = kept
 
     import pyspark.daemon
 

@@ -1,7 +1,7 @@
 """Spark-side extraction operator (SURVEY.md §2.12 ``extract_spans``).
 
-One vectorized pandas UDF is the whole hot path: Series[span array] ->
-Series[span array] over Arrow batches. Each document's spans arrive as a
+One vectorized Arrow UDF is the whole hot path: an Arrow array of span
+lists in, an Arrow struct array of results out. Each document's spans arrive as a
 single cell, so the per-document kernels (functions/kernels.py) run inside
 the batch with no per-row Python UDF and no shuffle — extraction is
 embarrassingly parallel across partitions (the reference processes one
@@ -13,10 +13,11 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.kernels import extract_document
 from ..functions.readability import CriteriaConfig, score_texts
@@ -39,9 +40,8 @@ def extract_spans_udf():
 
 
 # Fused extract+score output: ONE Python stage for the whole hot path.
-# Chaining two pandas UDFs costs a second Arrow round-trip and a second
-# per-worker warm-up (~2 s/worker); fusing halves both. Scoring stays
-# vectorized: it runs on the batch's extracted-text Series, not per row.
+# Chaining two Python UDFs costs a second Arrow round-trip and a second
+# per-worker warm-up (~2 s/worker); fusing halves both.
 EXTRACT_RESULT_TYPE = T.StructType(
     [
         T.StructField("spans", SPANS_TYPE),
@@ -51,30 +51,100 @@ EXTRACT_RESULT_TYPE = T.StructType(
     ]
 )
 
-_VALIDATION_FIELDS = [f.name for f in VALIDATION_TYPE.fields]
+_RESULT_ARROW_TYPE = to_arrow_type(EXTRACT_RESULT_TYPE)
+_RESULT_TYPES = {f.name: f.type for f in _RESULT_ARROW_TYPE}
+
+
+def spans_array(docs, spans_type: pa.DataType) -> pa.ListArray:
+    """The ``list<struct>`` spans column of ``docs`` (per-document lists of
+    span dicts), built from flattened parallel lists plus an offsets array
+    instead of letting ``pa.array`` infer from the dicts: 15x faster (5 ms
+    vs 76 ms per 2.7k-doc slice), identical array (pinned by
+    tests/test_fused_impl.py)."""
+    span_struct = spans_type.value_type
+    offsets = [0]
+    kinds: list = []
+    txts: list = []
+    refs: list = []
+    offs: list = []
+    n_flat = 0
+    for doc in docs:
+        n_flat += len(doc)
+        offsets.append(n_flat)
+        for sp in doc:
+            kinds.append(sp["kind"])
+            txts.append(sp["text"])
+            refs.append(sp["media_ref"])
+            offs.append(sp["offset"])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, type=pa.int32()),
+        pa.StructArray.from_arrays(
+            [
+                pa.array(kinds, type=pa.string()),
+                pa.array(txts, type=pa.string()),
+                pa.array(refs, type=pa.string()),
+                pa.array(offs, type=pa.int32()),
+            ],
+            fields=list(span_struct),
+        ),
+    )
+
+
+def extract_result_columns(extracted, cfg: CriteriaConfig, types) -> dict:
+    """The extraction columns (spans, n_spans, n_chars, validation) of a
+    batch as Arrow arrays, from its extracted documents: the one result
+    builder of every extraction stage. ``types`` maps those column names to
+    their Arrow types. Scoring stays vectorized: it runs on the batch's
+    extracted-text Series, not per row."""
+    texts = pd.Series(
+        [
+            " ".join(sp["text"] for sp in doc if sp["kind"] in TEXT_KINDS)
+            for doc in extracted
+        ]
+    )
+    scored = score_texts(texts, cfg)
+    validation_type = types["validation"]
+    return {
+        "spans": spans_array(extracted, types["spans"]),
+        "n_spans": pa.array([len(d) for d in extracted], type=pa.int32()),
+        "n_chars": pa.array(texts.str.len().astype("int32"), type=pa.int32()),
+        "validation": pa.StructArray.from_arrays(
+            [
+                pa.array(scored[f.name], type=f.type, from_pandas=True)
+                for f in validation_type
+            ],
+            fields=list(validation_type),
+        ),
+    }
+
+
+def extract_result_array(extracted, cfg: CriteriaConfig) -> pa.StructArray:
+    """``extract_result_columns`` as one EXTRACT_RESULT_TYPE struct array."""
+    cols = extract_result_columns(extracted, cfg, _RESULT_TYPES)
+    return pa.StructArray.from_arrays(
+        [cols[f.name] for f in _RESULT_ARROW_TYPE], fields=list(_RESULT_ARROW_TYPE)
+    )
+
+
+def arrow_cells(col):
+    """The Python cells of an Arrow column, by ``to_pandas()``. On a
+    2048-doc ``list<struct>`` spans batch (pyspark 4.1.2, pyarrow 16.1)
+    that takes 18-22 ms of CPU, where the pandas-UDF serializer's
+    per-struct converters take 37-50 ms and ``to_pylist()`` 126-144 ms
+    (BENCH/boundary_ab.json).
+    Cells arrive as ndarrays of dicts; an int field with nulls anywhere in
+    the batch arrives as float (3.0) or None. A pandas Series of such cells
+    passes through, so the UDF bodies also run on local data."""
+    return col.to_pandas() if isinstance(col, pa.Array) else col
 
 
 @udf_per_context
 def make_extract_and_score_udf(cfg: CriteriaConfig):
-    @F.pandas_udf(EXTRACT_RESULT_TYPE)
-    def extract_and_score(spans: pd.Series) -> pd.DataFrame:
-        extracted = [extract_document(s) if s is not None else [] for s in spans]
-        texts = pd.Series(
-            [
-                " ".join(
-                    sp["text"] for sp in doc if sp["kind"] in TEXT_KINDS
-                )
-                for doc in extracted
-            ]
-        )
-        scored = score_texts(texts, cfg)
-        return pd.DataFrame(
-            {
-                "spans": extracted,
-                "n_spans": [len(d) for d in extracted],
-                "n_chars": texts.str.len().astype("int32"),
-                "validation": scored[_VALIDATION_FIELDS].to_dict("records"),
-            }
+    @F.arrow_udf(EXTRACT_RESULT_TYPE)
+    def extract_and_score(spans: pa.Array) -> pa.Array:
+        return extract_result_array(
+            [extract_document(s) if s is not None else [] for s in arrow_cells(spans)],
+            cfg,
         )
 
     return extract_and_score
@@ -174,13 +244,12 @@ def _drop_fused_pool():
 
 def _fused_compute_batch(ids, seed: int, mega_every: int, cfg: CriteriaConfig,
                          out_fields):
-    """Arrow twin of _fused_compute: returns a pyarrow.RecordBatch built
-    directly from the kernel outputs. Each fork-helper slice becomes its
-    own output batch, so the object->Arrow conversion (the single most
-    expensive non-kernel step in the worker) runs in PARALLEL across the
-    helpers instead of serially in the worker thread after reassembly."""
-    import pyarrow as pa
-
+    """One slice of the fused stage: generate, extract and score ``ids``
+    into a pyarrow.RecordBatch built directly from the kernel outputs.
+    Each fork-helper slice becomes its own output batch, so the
+    object->Arrow conversion (the single most expensive non-kernel step in
+    the worker) runs in PARALLEL across the helpers instead of serially in
+    the worker thread after reassembly."""
     from ..corpus import gen_doc
 
     rows = []
@@ -192,71 +261,14 @@ def _fused_compute_batch(ids, seed: int, mega_every: int, cfg: CriteriaConfig,
         )
         rows.append(gen_doc(int(idx), seed, family=fam))
     extracted = [extract_document(r["spans"]) for r in rows]
-    texts = pd.Series(
-        [
-            " ".join(sp["text"] for sp in doc if sp["kind"] in TEXT_KINDS)
-            for doc in extracted
-        ]
+    cols = extract_result_columns(extracted, cfg, dict(out_fields))
+    cols.update(
+        doc_id=pa.array([r["doc_id"] for r in rows], type=pa.string()),
+        standard=pa.array([r["standard"] for r in rows], type=pa.string()),
+        subject=pa.array([r["subject"] for r in rows], type=pa.string()),
+        chapter=pa.array([r["chapter"] for r in rows], type=pa.string()),
+        content_type=pa.array([r["content_type"] for r in rows], type=pa.string()),
     )
-    scored = score_texts(texts, cfg)
-    types = dict(out_fields)
-    validation_type = types["validation"]
-    validation = pa.StructArray.from_arrays(
-        [
-            pa.array(scored[f.name], type=f.type, from_pandas=True)
-            for f in validation_type
-        ],
-        fields=list(validation_type),
-    )
-    # Build the list<struct> spans column from flattened parallel lists +
-    # an offsets array instead of letting pa.array infer from per-span
-    # dicts — 15x faster (5 ms vs 76 ms per 2.7k-doc slice), identical
-    # array (pinned by tests/test_fused_impl.py).
-    spans_type = types["spans"]
-    span_struct = spans_type.value_type
-    offsets = [0]
-    kinds: list = []
-    txts: list = []
-    refs: list = []
-    offs: list = []
-    n_flat = 0
-    for doc in extracted:
-        n_flat += len(doc)
-        offsets.append(n_flat)
-        for sp in doc:
-            kinds.append(sp["kind"])
-            txts.append(sp["text"])
-            refs.append(sp["media_ref"])
-            offs.append(sp["offset"])
-    spans_arr = pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int32()),
-        pa.StructArray.from_arrays(
-            [
-                pa.array(kinds, type=pa.string()),
-                pa.array(txts, type=pa.string()),
-                pa.array(refs, type=pa.string()),
-                pa.array(offs, type=pa.int32()),
-            ],
-            fields=[
-                span_struct.field(i) for i in range(span_struct.num_fields)
-            ],
-        ),
-    )
-    cols = {
-        "doc_id": pa.array([r["doc_id"] for r in rows], type=pa.string()),
-        "spans": spans_arr,
-        "standard": pa.array([r["standard"] for r in rows], type=pa.string()),
-        "subject": pa.array([r["subject"] for r in rows], type=pa.string()),
-        "chapter": pa.array([r["chapter"] for r in rows], type=pa.string()),
-        "content_type": pa.array(
-            [r["content_type"] for r in rows], type=pa.string()
-        ),
-        "n_spans": pa.array([len(d) for d in extracted], type=pa.int32()),
-        "n_chars": pa.array(
-            texts.str.len().astype("int32"), type=pa.int32()
-        ),
-        "validation": validation,
-    }
     schema = pa.schema([pa.field(n, t) for n, t in out_fields])
     return pa.RecordBatch.from_arrays(
         [cols[n] for n, _t in out_fields], schema=schema
@@ -270,8 +282,6 @@ def make_generate_extract_score_batch_fn(cfg: CriteriaConfig, seed: int,
     Iterator[RecordBatch(doc columns + n_spans + n_chars + validation)].
     Yields one output batch per fork-helper slice — no pandas reassembly,
     no single-threaded object->Arrow conversion in the worker."""
-
-    lookahead = os.environ.get("SPARK_GRAFT_FUSED_LOOKAHEAD", "1") != "0"
 
     def generate_extract_score_batches(batches):
         from concurrent.futures.process import BrokenProcessPool
@@ -312,18 +322,12 @@ def make_generate_extract_score_batch_fn(cfg: CriteriaConfig, seed: int,
                 own_result = _fused_compute_batch(
                     own, seed, mega_every, cfg, out_fields
                 )
-                nxt = None
-                if lookahead:
-                    nxt = next(it, None)
-                    if nxt is not None:
-                        nxt_state = submit(nxt)
+                nxt = next(it, None)
+                if nxt is not None:
+                    nxt_state = submit(nxt)
                 yield own_result
                 for p in pending:
                     yield _helper_result(pool, p)
-                if not lookahead:
-                    nxt = next(it, None)
-                    if nxt is not None:
-                        nxt_state = submit(nxt)
                 if nxt is None:
                     return
                 own, pending = nxt_state
@@ -335,18 +339,13 @@ def make_generate_extract_score_batch_fn(cfg: CriteriaConfig, seed: int,
 
 
 # ---------------------------------------------------------------------------
-# mapInArrow twin of the fused stage (r2 VERDICT #2), r3 verdict: PARITY
-# within noise, kept as an equality-pinned option (pandas UDF remains
-# default). Why no win: Spark 4's pandas serializer is already Arrow-
-# backed — the list<struct> input conversion (to_pandas) is identical in
-# both paths and to_pylist is 6x SLOWER; the only real saving is building
-# outputs directly as Arrow arrays (~4-5% of worker time), and mapInArrow
-# must ship every passthrough column through the worker socket both ways
-# (ArrowEvalPython ships only the spans column), which offsets it.
-# Numbers in BENCH/BASELINE.md §r3. The pandas UDF is the GOLDEN TWIN
-# (tests/test_arrow_impl.py pins row-for-row equality the way
-# test_fast_html.py pins the tokenizer; the sf literal oracles x1/x2/g1
-# pin the default path against pure-Python tables).
+# mapInArrow twin of the column UDF (r2 VERDICT #2), r3 verdict: PARITY
+# within noise, kept as an equality-pinned option. It runs the same body as
+# make_extract_and_score_udf (arrow_cells in, extract_result_columns out);
+# the difference is the plan: mapInArrow ships every passthrough column
+# through the worker socket both ways, where the UDF's ArrowEvalPython
+# ships only the spans column. Numbers in BENCH/BASELINE.md §r3;
+# tests/test_arrow_impl.py pins row-for-row equality with the UDF.
 # ---------------------------------------------------------------------------
 
 
@@ -356,53 +355,17 @@ def make_extract_and_score_arrow_fn(cfg: CriteriaConfig, out_fields):
     list of (name, pyarrow.DataType) for the OUTPUT schema, computed on
     the driver (pyspark.sql.pandas.types.to_arrow_type) and captured by
     the closure so workers never re-derive schema."""
-    import pyarrow as pa
-
     out_schema = pa.schema([pa.field(n, t) for n, t in out_fields])
-    types = {n: t for n, t in out_fields}
-    spans_type = types["spans"]
-    validation_type = types["validation"]
+    types = dict(out_fields)
 
     def extract_and_score_arrow(batches):
         for batch in batches:
-            # to_pandas, NOT to_pylist: pyarrow's pandas conversion of
-            # list<struct> is ~6x faster (measured 0.08s vs 0.49s per 8k
-            # batch); cells arrive as ndarrays of dicts, which the kernel
-            # consumes identically
-            spans = batch.column(
-                batch.schema.get_field_index("spans")
-            ).to_pandas()
-            extracted = [
-                extract_document(s) if s is not None else [] for s in spans
-            ]
-            texts = pd.Series(
-                [
-                    " ".join(
-                        sp["text"] for sp in doc if sp["kind"] in TEXT_KINDS
-                    )
-                    for doc in extracted
-                ]
+            spans = arrow_cells(batch.column(batch.schema.get_field_index("spans")))
+            new_cols = extract_result_columns(
+                [extract_document(s) if s is not None else [] for s in spans],
+                cfg,
+                types,
             )
-            scored = score_texts(texts, cfg)
-            validation = pa.StructArray.from_arrays(
-                [
-                    pa.array(
-                        scored[f.name], type=f.type, from_pandas=True
-                    )
-                    for f in validation_type
-                ],
-                fields=list(validation_type),
-            )
-            new_cols = {
-                "spans": pa.array(extracted, type=spans_type),
-                "n_spans": pa.array(
-                    [len(d) for d in extracted], type=pa.int32()
-                ),
-                "n_chars": pa.array(
-                    texts.str.len().astype("int32"), type=pa.int32()
-                ),
-                "validation": validation,
-            }
             arrays = [
                 new_cols[f.name]
                 if f.name in new_cols

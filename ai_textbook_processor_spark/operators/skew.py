@@ -21,14 +21,23 @@ Small docs bypass all of this on the fused single-stage path.
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.kernels import chunk_document, extract_text_spans, stitch_media
-from ..functions.readability import CriteriaConfig, score_texts
-from ..operators.extract import TEXT_KINDS, EXTRACT_RESULT_TYPE
+# score_texts is not called here (reassembly scores through
+# extract_result_array) but stays a name of this module: layer timers and
+# out-of-Spark drivers of the salted path resolve the kernels through it
+from ..functions.readability import CriteriaConfig, score_texts  # noqa: F401
+from ..operators.extract import (
+    EXTRACT_RESULT_TYPE,
+    arrow_cells,
+    extract_result_array,
+    spans_array,
+)
 from ..operators.validate import is_valid_expr
 from ..plans.pipeline import extract_documents, with_bucket
 from ..schemas import SPANS_TYPE
@@ -88,58 +97,87 @@ _PARTIAL_TYPE = T.ArrayType(
 )
 
 
+_CHUNK_ITEM = to_arrow_type(_CHUNK_TYPE).value_type
+_CHUNK_FIELD_TYPES = {f.name: f.type for f in _CHUNK_ITEM}
+_PARTIAL_ITEM = to_arrow_type(_PARTIAL_TYPE).value_type
+
+
 @udf_per_context
 def _chunk_udf(max_units: int):
-    @F.pandas_udf(_CHUNK_TYPE)
-    def chunk(spans: pd.Series) -> pd.Series:
-        out = []
-        for sp in spans:
-            chunks, media = chunk_document(
-                sp if sp is not None else [], max_units
-            )
+    @F.arrow_udf(_CHUNK_TYPE)
+    def chunk(spans: pa.Array) -> pa.Array:
+        doc_offsets = [0]
+        idxs: list = []
+        chunk_spans: list = []
+        media_spans: list = []
+        media_offsets: list = []
+        for sp in arrow_cells(spans):
+            chunks, media = chunk_document(sp if sp is not None else [], max_units)
             offsets = [m[3] for m in media]
-            media_spans = [
-                {"kind": k, "text": t, "media_ref": r, "offset": o}
-                for k, t, r, o in media
-            ]
-            out.append(
-                [
-                    {
-                        "chunk_idx": i,
-                        "chunk": c,
-                        "media": media_spans if i == 0 else [],
-                        "media_offsets": offsets,
-                    }
-                    for i, c in enumerate(chunks)
-                ]
-            )
-        return pd.Series(out)
+            for i, c in enumerate(chunks):
+                idxs.append(i)
+                chunk_spans.append(c)
+                media_spans.append(
+                    [
+                        {"kind": k, "text": t, "media_ref": r, "offset": o}
+                        for k, t, r, o in media
+                    ]
+                    if i == 0
+                    else []
+                )
+                media_offsets.append(offsets)
+            doc_offsets.append(len(idxs))
+        items = pa.StructArray.from_arrays(
+            [
+                pa.array(idxs, type=pa.int32()),
+                spans_array(chunk_spans, _CHUNK_FIELD_TYPES["chunk"]),
+                spans_array(media_spans, _CHUNK_FIELD_TYPES["media"]),
+                pa.array(media_offsets, type=_CHUNK_FIELD_TYPES["media_offsets"]),
+            ],
+            fields=list(_CHUNK_ITEM),
+        )
+        return pa.ListArray.from_arrays(pa.array(doc_offsets, type=pa.int32()), items)
 
     return chunk
 
 
 @udf_per_context
 def _partial_udf():
-    @F.pandas_udf(_PARTIAL_TYPE)
-    def partial(chunks: pd.Series, media_offsets: pd.Series) -> pd.Series:
-        out = []
-        for chunk, offsets in zip(chunks, media_offsets):
-            spans = extract_text_spans(
-                chunk if chunk is not None else [],
-                list(offsets) if offsets is not None else [],
-            )
-            out.append([{"kind": k, "text": t, "src": s} for k, t, s in spans])
-        return pd.Series(out)
+    @F.arrow_udf(_PARTIAL_TYPE)
+    def partial(chunks: pa.Array, media_offsets: pa.Array) -> pa.Array:
+        doc_offsets = [0]
+        kinds: list = []
+        texts: list = []
+        srcs: list = []
+        # to_pylist, not to_pandas: a list<int> with nulls would arrive as
+        # floats with NaN
+        for chunk, offsets in zip(arrow_cells(chunks), media_offsets.to_pylist()):
+            for k, t, src in extract_text_spans(
+                chunk if chunk is not None else [], offsets or []
+            ):
+                kinds.append(k)
+                texts.append(t)
+                srcs.append(src)
+            doc_offsets.append(len(kinds))
+        items = pa.StructArray.from_arrays(
+            [
+                pa.array(kinds, type=pa.string()),
+                pa.array(texts, type=pa.string()),
+                pa.array(srcs, type=pa.int32()),
+            ],
+            fields=list(_PARTIAL_ITEM),
+        )
+        return pa.ListArray.from_arrays(pa.array(doc_offsets, type=pa.int32()), items)
 
     return partial
 
 
 @udf_per_context
 def _reassemble_udf(cfg: CriteriaConfig):
-    @F.pandas_udf(EXTRACT_RESULT_TYPE)
-    def reassemble(parts: pd.Series, media: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf(EXTRACT_RESULT_TYPE)
+    def reassemble(parts: pa.Array, media: pa.Array) -> pa.Array:
         docs = []
-        for chunk_parts, media_spans in zip(parts, media):
+        for chunk_parts, media_spans in zip(arrow_cells(parts), arrow_cells(media)):
             text_spans = [
                 (p["kind"], p["text"], int(p["src"]))
                 for part in (chunk_parts if chunk_parts is not None else [])
@@ -150,22 +188,7 @@ def _reassemble_udf(cfg: CriteriaConfig):
                 for m in (media_spans if media_spans is not None else [])
             ]
             docs.append(stitch_media(text_spans, media_tuples))
-        texts = pd.Series(
-            [
-                " ".join(sp["text"] for sp in d if sp["kind"] in TEXT_KINDS)
-                for d in docs
-            ]
-        )
-        scored = score_texts(texts, cfg)
-        val_fields = [f.name for f in EXTRACT_RESULT_TYPE["validation"].dataType.fields]
-        return pd.DataFrame(
-            {
-                "spans": docs,
-                "n_spans": [len(d) for d in docs],
-                "n_chars": texts.str.len().astype("int32"),
-                "validation": scored[val_fields].to_dict("records"),
-            }
-        )
+        return extract_result_array(docs, cfg)
 
     return reassemble
 

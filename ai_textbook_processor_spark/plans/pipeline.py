@@ -1,7 +1,7 @@
 """End-to-end extraction plan (SURVEY.md §3.1 Spark re-expression).
 
 read documents -> repartition by hash(doc_id) (explicit bucket column so
-resume/lineage can address partitions) -> extract_spans pandas UDF ->
+resume/lineage can address partitions) -> extract+score Arrow UDF ->
 validation struct -> valid/quarantine split -> write + lineage.
 
 The only shuffle in the whole plan is the optional bucket repartition; the
@@ -30,22 +30,23 @@ DEFAULT_BUCKETS = 32
 
 # Hot-path implementation: "fused" (default; generate+extract+score in ONE
 # Python stage when the input is a corpus_df-generated frame, falling back
-# to the pandas UDF otherwise), "pandas" (pandas UDF), or "arrow"
-# (mapInArrow twin). tests/test_arrow_impl.py and tests/test_fused_impl.py
-# pin row-for-row equality between the implementations.
+# to the column UDF otherwise), "pandas" (the column UDF: an Arrow UDF over
+# the spans column, planned as ArrowEvalPython; the name is from when it
+# was a pandas UDF), or "arrow" (mapInArrow twin). tests/test_arrow_impl.py
+# and tests/test_fused_impl.py pin row-for-row equality between them.
 # r6 measurement (OPTIMIZATION_r06.md): fusing generation into the
 # extraction stage removes both Arrow crossings of the raw spans column
 # (generator out + extract UDF in) — the heaviest payload in the plan,
 # which extraction REPLACES anyway: 960k docs 35.7 s -> 29.9 s at 16 task
 # lanes, and the Python-bound fused stage then scales to 32 lanes (13.7 s)
 # where the boundary-heavy two-stage plan could not.
-# r3 measurement (BENCH/BASELINE.md): the mapInArrow path is PARITY within
-# noise, not the hoped ~10-15% — Spark 4's pandas serializer is already
-# Arrow-backed (list<struct> input conversion is identical), the output-
-# side saving is ~4-5% of worker time, and mapInArrow ships every
-# passthrough column through the worker socket both ways (the pandas UDF
-# ships only the spans column), which eats that saving. Kept as an
-# equality-pinned option; the golden pandas twin stays the default.
+# r3 measurement (BENCH/BASELINE.md): the mapInArrow twin measured at
+# PARITY with the then pandas UDF, although its raw to_pandas() input is
+# about 2x faster than the pandas serializer's per-struct list<struct>
+# conversion on pyspark 4.1.2 (BENCH/boundary_ab.json): mapInArrow ships
+# every passthrough column through the worker socket both ways (the
+# column UDF ships only the spans column), which ate that saving. The
+# column UDF now reads its input with the same raw to_pandas().
 DEFAULT_UDF_IMPL = "fused"
 
 
@@ -133,7 +134,7 @@ def extract_documents(
 ) -> DataFrame:
     """The flagship plan: documents_interleaved -> extracted + validation.
 
-    One fused pandas-UDF stage (extract E1-E3 + score E4), zero shuffles by
+    One fused Arrow-UDF stage (extract E1-E3 + score E4), zero shuffles by
     default. ``repartition=True`` adds the hash(doc_id) bucket shuffle —
     needed only when the input isn't already bucket-partitioned (an Iceberg
     table bucketed by doc_id arrives pre-partitioned, so the production
@@ -150,7 +151,7 @@ def extract_documents(
     ):
         return _extract_generated(df.sparkSession, spec, cfg, n_buckets)
     if resolved == "fused":
-        resolved = "pandas"  # fusion needs a generated corpus; golden twin
+        resolved = "pandas"  # fusion needs a generated corpus
     # respect a caller-assigned bucket column (the resume runner buckets
     # with its own modulus before filtering groups)
     out = df if "bucket" in df.columns else with_bucket(df, n_buckets)

@@ -66,32 +66,33 @@ def test_fused_falls_back_on_repartition_or_bucket(spark):
     assert "ArrowEvalPython" in plan
 
 
-def test_fused_lookahead_equals_no_lookahead_multibatch(spark):
+def test_fused_multibatch_helpers_equal_serial(spark):
     """The 1-batch lookahead (helpers start batch k+1 before batch k is
     yielded) must be invisible in the output. Shrink the Arrow batch size
-    so each partition really carries several input batches — the only
-    regime where the lookahead path differs from the serial loop."""
+    so each partition carries several input batches, each large enough to
+    split across the worker and a helper, and compare with the serial run
+    (no helpers: every batch computed in the worker thread)."""
     import os
+
+    from ai_textbook_processor_spark.operators.extract import _MIN_SPLIT
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
-    docs = corpus_df(spark, 520, seed=9, mega_every=130, num_partitions=2)
-    spark.conf.set(key, "64")  # 260 ids/partition -> ~5 input batches
+    docs = corpus_df(spark, 1040, seed=9, mega_every=260, num_partitions=2)
+    # 520 ids/partition -> input batches of 256, 256 and 8; the first two
+    # split between the worker and one helper
+    spark.conf.set(key, str(2 * _MIN_SPLIT))
     try:
         os.environ["SPARK_GRAFT_FUSED_PROCS"] = "2"
         try:
-            os.environ["SPARK_GRAFT_FUSED_LOOKAHEAD"] = "1"
-            on = extract_documents(docs, impl="fused").collect()
-            os.environ["SPARK_GRAFT_FUSED_LOOKAHEAD"] = "0"
-            off = extract_documents(docs, impl="fused").collect()
+            helpers = extract_documents(docs, impl="fused").collect()
         finally:
             del os.environ["SPARK_GRAFT_FUSED_PROCS"]
-            del os.environ["SPARK_GRAFT_FUSED_LOOKAHEAD"]
     finally:
         spark.conf.set(key, old)
     serial = extract_documents(docs, impl="fused").collect()
-    assert len(on) == len(off) == len(serial) == 520
-    assert on == off == serial
+    assert len(helpers) == len(serial) == 1040
+    assert helpers == serial
 
 
 def test_fused_parallel_helper_equals_serial(spark):

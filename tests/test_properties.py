@@ -106,3 +106,97 @@ def test_fuzz_extract_never_crashes_and_invariants_hold(spans):
     assert out_refs == in_refs
     # idempotence survives fuzz
     assert extract_document(out) == out
+
+
+# -- the table path's Arrow UDF bodies, run out of Spark on Arrow input:
+# null cells, null span fields and empty docs must give exactly the
+# kernels' output. to_pandas() hands an int field with nulls in the batch
+# over as float, which must not change a value.
+
+_doc_cell = st.one_of(st.none(), st.lists(st.one_of(st.none(), _span), max_size=12))
+
+
+def _golden(cells):
+    import pandas as pd
+
+    from ai_textbook_processor_spark.functions.readability import CriteriaConfig, score_texts
+    from ai_textbook_processor_spark.operators.extract import TEXT_KINDS
+
+    docs = [extract_document(c) for c in cells]
+    texts = pd.Series([" ".join(s["text"] for s in d if s["kind"] in TEXT_KINDS) for d in docs])
+    scored = score_texts(texts, CriteriaConfig())
+    fields = ["fk_grade", "ttr", "n_words", "n_sentences", "grade_check",
+              "safety_check", "relevance_check", "reason"]
+    return [
+        {"spans": d, "n_spans": len(d), "n_chars": len(t), "validation": v}
+        for d, t, v in zip(docs, texts, scored[fields].to_dict("records"))
+    ]
+
+
+def _spans_arrow(cells):
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from ai_textbook_processor_spark.schemas import SPANS_TYPE
+
+    return pa.array(cells, type=to_arrow_type(SPANS_TYPE))
+
+
+def _salted_bodies(spans, cfg, max_units):
+    """The salted path's three UDF bodies chained the way the plan chains
+    them: chunks exploded, partials per chunk, chunks regrouped per doc."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ai_textbook_processor_spark.operators import skew
+
+    chunked = skew._chunk_udf(max_units).func(spans)
+    items = chunked.flatten()
+    partials = skew._partial_udf().func(items.field("chunk"), items.field("media_offsets"))
+    parts = pa.ListArray.from_arrays(
+        chunked.offsets,
+        pa.StructArray.from_arrays([items.field("chunk_idx"), partials], ["chunk_idx", "partial"]),
+    )
+    media_lists = items.field("media")
+    media = pa.ListArray.from_arrays(
+        pc.take(media_lists.offsets, chunked.offsets), media_lists.flatten()
+    )
+    return skew._reassemble_udf(cfg).func(parts, media)
+
+
+@settings(max_examples=80, deadline=None, derandomize=True)
+@given(st.lists(_doc_cell, min_size=1, max_size=6))
+def test_arrow_udf_bodies_equal_kernels_on_nulls(cells):
+    from ai_textbook_processor_spark.functions.readability import CriteriaConfig
+    from ai_textbook_processor_spark.operators.extract import make_extract_and_score_udf
+
+    cfg = CriteriaConfig()
+    spans = _spans_arrow(cells)
+    golden = _golden(cells)
+    assert make_extract_and_score_udf(cfg).func(spans).to_pylist() == golden
+    for max_units in (1, 3):
+        assert _salted_bodies(spans, cfg, max_units).to_pylist() == golden
+
+
+def test_arrow_udf_bodies_on_mega_doc_with_nulls_and_captions():
+    from ai_textbook_processor_spark.functions.readability import CriteriaConfig
+    from ai_textbook_processor_spark.operators.extract import make_extract_and_score_udf
+
+    mega = gen_doc(11, seed=42, family="mega_doc")["spans"]
+    holed = [
+        dict(sp, offset=None) if i % 7 == 0
+        else dict(sp, media_ref=None) if i % 11 == 0
+        else dict(sp, text=None) if i % 13 == 0
+        else dict(sp, kind=None) if i % 17 == 0
+        else sp
+        for i, sp in enumerate(mega)
+    ]
+    captioned = gen_doc(4, seed=42, family="pdf_caption")["spans"]
+    cells = [holed, None, [], mega, captioned]
+    spans = _spans_arrow(cells)
+    cfg = CriteriaConfig()
+    golden = _golden(cells)
+    assert golden[0]["spans"] and golden[0]["spans"] != golden[3]["spans"]
+    assert any(s["kind"] == "caption" for s in golden[4]["spans"])
+    assert make_extract_and_score_udf(cfg).func(spans).to_pylist() == golden
+    assert _salted_bodies(spans, cfg, 16).to_pylist() == golden

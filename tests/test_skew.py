@@ -235,3 +235,78 @@ def test_aqe_splits_planted_skewed_join(spark):
                 conf.unset(k)
             else:
                 conf.set(k, v)
+
+
+def test_salted_and_unsalted_equal_kernels_on_null_cells_and_fields(spark):
+    """The table path's Arrow UDFs in Spark: a null spans cell, spans with
+    null kind/text/media_ref/offset, an empty doc and a mega doc with nulls
+    (salted) give exactly extract_document + score_texts, salted or not."""
+    import pandas as pd
+
+    from ai_textbook_processor_spark.functions.readability import CriteriaConfig, score_texts
+    from ai_textbook_processor_spark.operators.extract import TEXT_KINDS
+    from ai_textbook_processor_spark.operators.skew import extract_documents_salted
+    from ai_textbook_processor_spark.plans.pipeline import extract_documents
+    from ai_textbook_processor_spark.schemas import DOCUMENTS_SCHEMA, VALIDATION_TYPE
+
+    val_fields = [f.name for f in VALIDATION_TYPE.fields]
+
+    def holed(spans):
+        return [
+            dict(sp, offset=None) if i % 7 == 0
+            else dict(sp, media_ref=None) if i % 11 == 0
+            else dict(sp, text=None) if i % 13 == 0
+            else dict(sp, kind=None) if i % 17 == 0
+            else sp
+            for i, sp in enumerate(spans)
+        ]
+
+    cells = {
+        "null-cell": None,
+        "empty": [],
+        "null-fields": [
+            {"kind": None, "text": "Loose text.", "media_ref": None, "offset": 0},
+            {"kind": "html", "text": None, "media_ref": None, "offset": 1},
+            {"kind": "figure", "text": None, "media_ref": None, "offset": None},
+            {"kind": "text", "text": "Plain sentence here.", "media_ref": "m", "offset": None},
+            {"kind": "pdf_block", "text": "Block", "media_ref": None, "offset": 3},
+        ],
+        "mega-holed": holed(gen_doc(11, 42, family="mega_doc")["spans"]),
+        "mega-media-unanchored": [
+            dict(sp, offset=None) if sp["kind"] == "figure" else sp
+            for sp in gen_doc(23, 42, family="mega_doc")["spans"]
+        ],
+        "plain": gen_doc(3, 42)["spans"],
+    }
+    df = spark.createDataFrame(
+        [(k, v, "5", "science", "1", "text") for k, v in cells.items()], DOCUMENTS_SCHEMA
+    )
+
+    def inv(out):
+        return {
+            r["doc_id"]: (
+                [(s.kind, s.text, s.media_ref, s.offset) for s in r["spans"]],
+                r["n_spans"],
+                r["n_chars"],
+                r["validation"].asDict(),
+            )
+            for r in out.select("doc_id", "spans", "n_spans", "n_chars", "validation").collect()
+        }
+
+    cfg = CriteriaConfig()
+    docs = {k: extract_document(v) for k, v in cells.items()}
+    texts = {k: " ".join(s["text"] for s in d if s["kind"] in TEXT_KINDS) for k, d in docs.items()}
+    scored = score_texts(pd.Series(list(texts.values())), cfg)
+    golden = {
+        k: (
+            [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in docs[k]],
+            len(docs[k]),
+            len(texts[k]),
+            {f: v[f] for f in val_fields},
+        )
+        for k, v in zip(texts, scored.to_dict("records"))
+    }
+    unsalted = inv(extract_documents(df, cfg))
+    salted = inv(extract_documents_salted(df, cfg, span_threshold=64, max_units_per_chunk=16))
+    assert unsalted == golden
+    assert salted == golden
