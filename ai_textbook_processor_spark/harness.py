@@ -21,6 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+# word / sentence / syllable regexes: the scorer's own, used verbatim in both
+# engines (Java regex and RE2 agree on these constructs).
+from .functions.readability import SENT_RE, SILENT_E_RE, WORD_RE
+from .functions.readability import VOWEL_GROUP_RE as VOWEL_RE
+
 # ---------------------------------------------------------------------------
 # registry plumbing
 # ---------------------------------------------------------------------------
@@ -107,14 +112,6 @@ def _spread(df: DataFrame, *cols: str) -> DataFrame:
     if cols:
         df = df.select(*cols)
     return df.repartition(n)
-
-
-# word / sentence / syllable regexes — single source of truth, used verbatim
-# in both engines (Java regex and RE2 agree on these constructs).
-WORD_RE = "[A-Za-z0-9']+"
-SENT_RE = "[.!?]+"
-VOWEL_RE = "(?i)[aeiouy]+"
-SILENT_E_RE = "(?i)[a-z][bcdfghjklmnpqrstvwxz]e\\b"
 
 
 # ---------------------------------------------------------------------------

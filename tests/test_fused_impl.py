@@ -247,3 +247,124 @@ def test_batch_fn_pickles_without_the_helper_cache():
         cloudpickle.dumps(fn)
     finally:
         del extract._FUSED_POOL[key]
+
+
+# The Spark-level twin of the kill scenarios: a fused task whose fork helper
+# is SIGKILLed fails with BrokenProcessPool, Spark retries it, and the job's
+# rows are those of a serial run. Runs in a child interpreter at
+# local[2, 2] (two task attempts) for the same reasons as _KILL_SCRIPT.
+_SPARK_KILL_SCRIPT = r"""
+import json
+import os
+import sys
+import tempfile
+
+from pyspark.sql import SparkSession
+
+from ai_textbook_processor_spark.corpus import corpus_df
+from ai_textbook_processor_spark.operators import extract
+from ai_textbook_processor_spark.operators.extract import _MIN_SPLIT
+from ai_textbook_processor_spark.plans.pipeline import extract_documents
+
+spark = (
+    SparkSession.builder.master("local[2, 2]").appName("helper_kill_test")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    # 5 input batches per partition, each split between the worker and
+    # its one helper
+    .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(2 * _MIN_SPLIT))
+    .getOrCreate()
+)
+work = tempfile.mkdtemp(prefix="atps_helper_kill_")
+marker = os.path.join(work, "killed")
+attempts = os.path.join(work, "attempts")
+real_batch_fn = extract.make_generate_extract_score_batch_fn
+
+
+def killing_batch_fn(*args, **kwargs):
+    real = real_batch_fn(*args, **kwargs)
+
+    def batches_killing_a_helper_once(batches):
+        import multiprocessing as mp
+        import signal
+
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        with open(attempts, "a") as f:
+            f.write(f"{ctx.partitionId()} {ctx.attemptNumber()}\n")
+        for i, batch in enumerate(real(batches)):
+            yield batch
+            if i == 0:
+                try:  # one kill per job, whichever task gets here first
+                    os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+                except FileExistsError:
+                    continue
+                for helper in mp.active_children():
+                    os.kill(helper.pid, signal.SIGKILL)
+
+    return batches_killing_a_helper_once
+
+
+def rows(df):
+    return [r.asDict(recursive=True) for r in df.collect()]
+
+
+docs = corpus_df(spark, 2 * 5 * 2 * _MIN_SPLIT, seed=13, mega_every=640, num_partitions=2)
+extract.make_generate_extract_score_batch_fn = killing_batch_fn
+os.environ["SPARK_GRAFT_FUSED_PROCS"] = "2"
+spark.sparkContext.setJobGroup("helper_kill", "fused stage with a killed helper")
+killed = rows(extract_documents(docs, impl="fused"))
+sc = spark.sparkContext
+tracker = sc.statusTracker()
+failed_tasks = sum(
+    tracker.getStageInfo(s).numFailedTasks
+    for j in tracker.getJobIdsForGroup("helper_kill")
+    for s in tracker.getJobInfo(j).stageIds
+)
+extract.make_generate_extract_score_batch_fn = real_batch_fn
+del os.environ["SPARK_GRAFT_FUSED_PROCS"]
+sc.setJobGroup("serial", "fused stage without helpers")
+serial = rows(extract_documents(docs, impl="fused"))
+with open(attempts) as f:
+    retried = sorted({line.split()[0] for line in f if line.split()[1] != "0"})
+print(json.dumps({
+    "killed": os.path.exists(marker),
+    "failed_tasks": failed_tasks,
+    "retried_partitions": len(retried),
+    "rows": len(killed),
+    "equal_to_serial": killed == serial,
+}))
+spark.stop()
+"""
+
+
+def test_killed_helper_task_is_retried_to_serial_rows():
+    """SIGKILL one fork helper of the fused stage under Spark: the task
+    fails (BrokenProcessPool), is retried, and the job's rows equal a run
+    without helpers."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
+    env.pop("SPARK_GRAFT_FUSED_PROCS", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", _SPARK_KILL_SCRIPT],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == {
+        "killed": True,
+        "failed_tasks": 1,
+        "retried_partitions": 1,
+        "rows": 2560,
+        "equal_to_serial": True,
+    }
