@@ -123,8 +123,9 @@ def main(argv: list[str] | None = None) -> int:
         "--span-threshold",
         default=None,
         help="salted path: docs above this span count are chunk-split; an "
-        "integer, or 'auto' to derive P99.9 from the corpus itself "
-        "(one percentile_approx pre-pass)",
+        "integer, or 'auto' (the default: one pre-pass job salts only the "
+        "docs larger than the median input partition's span total, and "
+        "plans the plain one-stage path when there is none)",
     )
     args = ap.parse_args(argv)
 

@@ -3,12 +3,20 @@
 A 10^12-document corpus has documents ~1000x the median span count; one such
 doc pins one executor core for the whole stage (UDF compute skew — AQE's
 skew-join splitting can't help because the skew is inside a single row).
-This operator salts them:
+Salting pays only when a doc outweighs the rest of its task, so by default
+(``span_threshold="auto"``) a pre-pass job (:func:`mega_doc_cut`) reads
+each input partition's span total and its largest doc, and only docs above
+the median partition total (at least ``DEFAULT_SPAN_THRESHOLD`` spans) are
+salted; when none is, the plan is plain ``extract_documents`` — one scan,
+one Python stage, no Exchange. The pre-pass is a job of its own: on a
+``corpus_df``-generated frame it runs the generator once more.
 
-  split: docs above ``span_threshold`` are chunked at unit boundaries
-         (whole PDF pages / whole HTML fragments, kernels.chunk_document)
-         -> posexplode -> repartition by (doc_id, chunk_idx) so one doc's
-         chunks land on different executors
+The docs above the cut take this path:
+
+  split: chunked at unit boundaries (whole PDF pages / whole HTML
+         fragments, kernels.chunk_document) -> posexplode -> repartition
+         by (doc_id, chunk_idx) so one doc's chunks land on different
+         executors
   map:   each chunk runs the SAME pre-stitch kernel (extract_text_spans),
          emitting (kind, text, src_offset) partials
   merge: groupBy(doc_id) -> sort chunks -> concat partials -> stitch media
@@ -16,10 +24,12 @@ This operator salts them:
 
 Output is exactly equal to the unsalted plan (tested: salted == unsalted on
 mega docs), because chunk boundaries respect the kernels' unit structure.
-Small docs bypass all of this on the fused single-stage path.
+The other docs run the one-stage plan.
 """
 
 from __future__ import annotations
+
+import statistics
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -38,42 +48,36 @@ from ..operators.extract import (
     extract_result_array,
     spans_array,
 )
-from ..operators.validate import is_valid_expr
-from ..plans.pipeline import extract_documents, with_bucket
+from ..plans.pipeline import bucket_col, extract_documents, result_columns
 from ..schemas import SPANS_TYPE
 from ..session import udf_per_context
 
 DEFAULT_SPAN_THRESHOLD = 512
 DEFAULT_UNITS_PER_CHUNK = 128
-PROFILE_QUANTILE = 0.999
-PROFILE_FLOOR = 64
 
 
-def profile_span_threshold(
-    df: DataFrame,
-    quantile: float = PROFILE_QUANTILE,
-    accuracy: int = 10_000,
-    floor: int = PROFILE_FLOOR,
-) -> int:
-    """Derive the salting threshold from the corpus itself: P99.9 of span
-    counts (SCALE.md's `pctile_stats`-style pre-pass), so ~0.1% of docs —
-    the actual outliers of THIS corpus — take the split/reassemble path,
-    whatever the size distribution is. A fixed 512 under-salts a corpus of
-    10k-span scanned books and pointlessly salts one of 600-span articles.
+def mega_doc_cut(df: DataFrame) -> tuple[int, int]:
+    """Profile ``df``'s input partitions in one pre-pass job and return
+    ``(cut, largest)``: the salting cut and the largest doc's span count.
 
-    Scale shape: ``percentile_approx`` is a partial aggregate — each task
-    folds its rows into one GK sketch and only the sketches move, so the
-    pre-pass is one scan + a single-row exchange regardless of corpus
-    size. ``floor`` keeps degenerate corpora (all tiny docs) off the
-    salted path entirely; the quantile value itself is a real observed
-    span count, so docs strictly above it are exactly the tail.
+    A doc straggles its task only when it outweighs the rest of that task,
+    so the cut is Spark AQE's skew rule ("larger than the median
+    partition") at document granularity: the median span total of the
+    non-empty input partitions, floored at ``DEFAULT_SPAN_THRESHOLD``.
+    The job reads only the ``spans.offset`` leaf (span counts, no text)
+    and shuffles one row per input partition.
     """
-    q = df.select(
-        F.percentile_approx(
-            F.coalesce(F.size("spans"), F.lit(0)), quantile, accuracy
-        ).alias("q")
-    ).first()["q"]
-    return max(floor, int(q if q is not None else 0))
+    n = F.coalesce(F.size("spans.offset"), F.lit(0))
+    rows = (
+        df.select(F.spark_partition_id().alias("p"), n.alias("n"))
+        .groupBy("p")
+        .agg(F.sum("n").alias("total"), F.max("n").alias("largest"))
+        .collect()
+    )
+    totals = [r["total"] for r in rows if r["total"] > 0]
+    cut = max(DEFAULT_SPAN_THRESHOLD, int(statistics.median(totals)) if totals else 0)
+    return cut, max((r["largest"] for r in rows), default=0)
+
 
 _CHUNK_TYPE = T.ArrayType(
     T.StructType(
@@ -199,20 +203,24 @@ _META_COLS = ["standard", "subject", "chapter", "content_type"]
 def extract_documents_salted(
     df: DataFrame,
     cfg: CriteriaConfig | None = None,
-    span_threshold: int | str = DEFAULT_SPAN_THRESHOLD,
+    span_threshold: int | str = "auto",
     max_units_per_chunk: int = DEFAULT_UNITS_PER_CHUNK,
     n_buckets: int = 32,
     chunk_partitions: int | None = None,
 ) -> DataFrame:
-    """Skew-aware extraction: fused fast path for normal docs, salted
-    split/reassemble for mega docs. Output schema and values identical to
-    ``extract_documents``. ``span_threshold="auto"`` profiles the corpus
-    (P99.9 pre-pass, :func:`profile_span_threshold`) instead of using the
-    fixed default — correct for any size distribution at the cost of one
-    extra scan."""
+    """Skew-aware extraction: the one-stage plan for normal docs, salted
+    split/reassemble for docs above ``span_threshold`` spans. Output schema
+    and values identical to ``extract_documents``.
+
+    ``span_threshold="auto"`` (the default) runs :func:`mega_doc_cut`'s
+    pre-pass and salts exactly the docs above its cut; when no doc is
+    above it, the plan is plain ``extract_documents`` (one scan, one
+    Python stage, no Exchange). An int salts every doc above it."""
     cfg = cfg or CriteriaConfig()
     if span_threshold == "auto":
-        span_threshold = profile_span_threshold(df)
+        span_threshold, largest = mega_doc_cut(df)
+        if largest <= span_threshold:
+            return extract_documents(df, cfg, n_buckets=n_buckets)
     # coalesce: under ANSI mode size(NULL) is NULL (not -1), which would
     # drop null-span docs from BOTH branches; pin them to the fused path so
     # they emit empty extractions exactly like extract_documents.
@@ -247,17 +255,9 @@ def extract_documents_salted(
             )
         ).alias("media"),
     )
-    reassemble = _reassemble_udf(cfg)
-    big_out = merged.withColumn("_r", reassemble("parts", "media"))
-    big_out = (
-        with_bucket(big_out, n_buckets)
-        .withColumn("spans", F.col("_r.spans"))
-        .withColumn("n_spans", F.col("_r.n_spans"))
-        .withColumn("n_chars", F.col("_r.n_chars"))
-        .withColumn("validation", F.col("_r.validation"))
-        .withColumn(
-            "is_valid", is_valid_expr("validation", relaxed=cfg.relaxed_relevance)
-        )
-        .drop("_r", "parts", "media")
+    cols = result_columns(_reassemble_udf(cfg)("parts", "media"), cfg)
+    cols["bucket"] = bucket_col(n_buckets)
+    big_out = merged.select(
+        *[cols[c].alias(c) if c in cols else c for c in small_out.columns]
     )
-    return small_out.unionByName(big_out.select(*small_out.columns))
+    return small_out.unionByName(big_out)

@@ -22,9 +22,11 @@ from ..functions.readability import (
 )
 
 
-def is_valid_expr(validation_col: str = "validation", relaxed: bool = False) -> Column:
+def is_valid_expr(
+    validation_col: str | Column = "validation", relaxed: bool = False
+) -> Column:
     """P6 strict conjunction / P7 relaxed gate — JVM-side."""
-    v = F.col(validation_col)
+    v = F.col(validation_col) if isinstance(validation_col, str) else validation_col
     rel = (
         v["relevance_check"].isin(REL_MATCH, REL_PARTIAL)
         if relaxed

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -117,12 +117,25 @@ def _extract_generated(spark, spec, cfg: CriteriaConfig,
     )
 
 
-def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+def bucket_col(n_buckets: int = DEFAULT_BUCKETS) -> Column:
     """Deterministic partition address: pmod(xxhash64(doc_id), n) — the unit
     of lineage accounting and checkpoint-resume (FIXTURES.md §4)."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
+def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+    return df.withColumn("bucket", bucket_col(n_buckets))
+
+
+def result_columns(result: Column, cfg: CriteriaConfig) -> dict[str, Column]:
+    """The extraction columns, in output order, from one extract-result
+    struct (an ``EXTRACT_RESULT_TYPE`` UDF call). Spark evaluates a UDF
+    that one projection references several times once."""
+    cols = {n: result[n] for n in ("spans", "n_spans", "n_chars", "validation")}
+    cols["is_valid"] = is_valid_expr(
+        cols["validation"], relaxed=cfg.relaxed_relevance
     )
+    return cols
 
 
 def extract_documents(
@@ -177,16 +190,8 @@ def extract_documents(
         ]
         fn = make_extract_and_score_arrow_fn(cfg, out_fields)
         out = out.mapInArrow(fn, T.StructType(out_spark_fields))
-    else:
-        udf = make_extract_and_score_udf(cfg)
-        out = out.withColumn("_r", udf("spans"))
-        out = (
-            out.withColumn("spans", F.col("_r.spans"))
-            .withColumn("n_spans", F.col("_r.n_spans"))
-            .withColumn("n_chars", F.col("_r.n_chars"))
-            .withColumn("validation", F.col("_r.validation"))
-            .drop("_r")
+        return out.withColumn(
+            "is_valid", is_valid_expr("validation", relaxed=cfg.relaxed_relevance)
         )
-    return out.withColumn(
-        "is_valid", is_valid_expr("validation", relaxed=cfg.relaxed_relevance)
-    )
+    # one projection: spans replaced in place, the rest appended
+    return out.withColumns(result_columns(make_extract_and_score_udf(cfg)("spans"), cfg))

@@ -64,61 +64,195 @@ def test_salted_spark_equals_unsalted(spark):
         ]
 
 
+def _docs_df(spark, docs, partitions):
+    """(doc_id, spans) pairs as a documents frame in exactly ``partitions``
+    input partitions; also returns each partition's span total, counted
+    from the rows as Spark sliced them."""
+    from ai_textbook_processor_spark.schemas import DOCUMENTS_SCHEMA
+
+    rdd = spark.sparkContext.parallelize(
+        [(d, sp, "5", "science", "1", "text") for d, sp in docs], partitions
+    )
+    totals = [sum(len(r[1] or []) for r in part) for part in rdd.glom().collect()]
+    return spark.createDataFrame(rdd, DOCUMENTS_SCHEMA), totals
+
+
+def _plain_docs(sizes):
+    return [
+        (
+            f"d{i:04d}",
+            [
+                {"kind": "text", "text": f"Plain sentence {i} {j}.",
+                 "media_ref": None, "offset": j}
+                for j in range(n)
+            ],
+        )
+        for i, n in enumerate(sizes)
+    ]
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _rows(df):
+    return {
+        r["doc_id"]: (
+            [(s.kind, s.text, s.media_ref, s.offset) for s in r["spans"]],
+            r["bucket"],
+            r["n_spans"],
+            r["n_chars"],
+            r["validation"].asDict(),
+            r["is_valid"],
+        )
+        for r in df.collect()
+    }
+
+
 def test_profiled_threshold_adapts_to_distribution(spark):
-    """VERDICT r2 #7: span_threshold derives from a P99.9 pre-pass, so it
-    tracks the corpus's own size distribution instead of the fixed 512."""
+    """The auto cut is AQE's skew rule at document granularity: the median
+    span total of the non-empty input partitions, floored at
+    DEFAULT_SPAN_THRESHOLD. A doc is salted only when it outweighs a
+    median task, so the same doc is salted or not depending on how much
+    else its task holds."""
+    import statistics
+
     from ai_textbook_processor_spark.corpus import corpus_df
     from ai_textbook_processor_spark.operators.skew import (
+        DEFAULT_SPAN_THRESHOLD,
         extract_documents_salted,
-        profile_span_threshold,
+        mega_doc_cut,
+    )
+    from ai_textbook_processor_spark.plans.pipeline import extract_documents
+
+    def expected_cut(totals):
+        return max(DEFAULT_SPAN_THRESHOLD, int(statistics.median([t for t in totals if t])))
+
+    article_sizes = [10 + (i * 7) % 41 for i in range(300)]  # 10..50
+    book_sizes = [900 + (i * 13) % 200 for i in range(300)]  # 900..1099
+    articles, a_totals = _docs_df(spark, _plain_docs(article_sizes), 4)
+    books, b_totals = _docs_df(spark, _plain_docs(book_sizes), 4)
+    t_articles, largest = mega_doc_cut(articles)
+    assert (t_articles, largest) == (expected_cut(a_totals), 50)
+    t_books, largest = mega_doc_cut(books)
+    assert (t_books, largest) == (expected_cut(b_totals), 1099)
+    # 75 books to a task: no book can straggle its task
+    assert t_books > 60_000 > t_articles > max(article_sizes)
+
+    # a fat tail: 500 small docs and two of 4000 spans, all in the last
+    # partition. In 8 partitions (~2.1k spans each) the two big docs, and
+    # only they, are above the cut; in 2 partitions they are not
+    tail_sizes = [20 + (i % 30) for i in range(500)] + [4000] * 2
+    tail8, totals8 = _docs_df(spark, _plain_docs(tail_sizes), 8)
+    cut8, largest = mega_doc_cut(tail8)
+    assert (cut8, largest) == (expected_cut(totals8), 4000)
+    assert [n for n in tail_sizes if n > cut8] == [4000, 4000]
+    tail2, totals2 = _docs_df(spark, _plain_docs(tail_sizes), 2)
+    cut2, _ = mega_doc_cut(tail2)
+    assert cut2 == expected_cut(totals2) > 4000
+
+    salted = extract_documents_salted(tail8)
+    assert _rows(salted) == _rows(extract_documents(tail8))
+    assert "chunk(" in _executed_plan(salted)
+    plain = extract_documents_salted(tail2)
+    assert _rows(plain) == _rows(extract_documents(tail2))
+    assert "chunk(" not in _executed_plan(plain)
+
+    # and auto-threshold extraction of a generated corpus stays
+    # value-equal to the fused plan
+    mixed = corpus_df(spark, 24, seed=7, mega_every=8)
+    assert _rows(extract_documents_salted(mixed)) == _rows(extract_documents(mixed))
+
+
+def test_auto_without_a_straggler_plans_one_stage(spark):
+    """Docs above DEFAULT_SPAN_THRESHOLD that do not outweigh a median
+    task are not salted: the executed plan is one scan and one Python
+    stage, with no Exchange and no chunk UDF, and its rows equal
+    extract_documents."""
+    from ai_textbook_processor_spark.operators.skew import (
+        DEFAULT_SPAN_THRESHOLD,
+        extract_documents_salted,
+        mega_doc_cut,
+    )
+    from ai_textbook_processor_spark.plans.pipeline import extract_documents
+
+    # each of 4 partitions: one 600-span doc and 20 of 31-50 spans
+    sizes = [n for p in range(4) for n in [600] + [31 + (p + i) % 20 for i in range(20)]]
+    df, _ = _docs_df(spark, _plain_docs(sizes), 4)
+    cut, largest = mega_doc_cut(df)
+    assert DEFAULT_SPAN_THRESHOLD < largest <= cut
+
+    out = extract_documents_salted(df)
+    assert _rows(out) == _rows(extract_documents(df))
+    plan = _executed_plan(out)
+    assert "Exchange" not in plan and "chunk(" not in plan, plan
+
+
+def test_auto_salts_the_doc_above_the_median_partition(spark):
+    """Two partitions, one holding a mega doc larger than the median
+    partition span total: the doc takes the salted branch, and the rows
+    equal extract_documents and the kernel goldens."""
+    import pandas as pd
+
+    from ai_textbook_processor_spark.functions.readability import CriteriaConfig, score_texts
+    from ai_textbook_processor_spark.operators.extract import TEXT_KINDS
+    from ai_textbook_processor_spark.operators.skew import (
+        extract_documents_salted,
+        mega_doc_cut,
+    )
+    from ai_textbook_processor_spark.plans.pipeline import extract_documents
+
+    mega = gen_doc(11, 42, family="mega_doc")
+    docs = [(mega["doc_id"], mega["spans"])] + [
+        (d["doc_id"], d["spans"]) for d in (gen_doc(i, 42) for i in range(1, 11))
+    ]
+    df, totals = _docs_df(spark, docs, 2)
+    cut, largest = mega_doc_cut(df)
+    assert largest == len(mega["spans"]) > cut == int(sum(totals) / 2)
+    assert [len(sp) for _, sp in docs if len(sp) > cut] == [largest]
+
+    out = extract_documents_salted(df)
+    got = _rows(out)
+    assert "chunk(" in _executed_plan(out)
+    assert got == _rows(extract_documents(df))
+
+    cfg = CriteriaConfig()
+    golden = {d: extract_document(sp) for d, sp in docs}
+    texts = [" ".join(s["text"] for s in g if s["kind"] in TEXT_KINDS) for g in golden.values()]
+    scored = score_texts(pd.Series(texts), cfg).to_dict("records")
+    for (doc_id, spans), text, score in zip(golden.items(), texts, scored):
+        assert got[doc_id][0] == [
+            (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans
+        ]
+        assert got[doc_id][2:4] == (len(spans), len(text))
+        assert got[doc_id][4] == {f: score[f] for f in got[doc_id][4]}
+
+
+def test_auto_on_degenerate_inputs_plans_plain_path(spark):
+    """Empty input, all-null spans and a single input partition (whose
+    largest doc can never outweigh the partition) plan the plain path."""
+    from ai_textbook_processor_spark.operators.skew import (
+        DEFAULT_SPAN_THRESHOLD,
+        extract_documents_salted,
+        mega_doc_cut,
     )
     from ai_textbook_processor_spark.plans.pipeline import extract_documents
     from ai_textbook_processor_spark.schemas import DOCUMENTS_SCHEMA
 
-    def mk(sizes):
-        rows = [
-            (
-                f"d{i:04d}",
-                [
-                    {"kind": "text", "text": f"Plain sentence {i} {j}.",
-                     "media_ref": None, "offset": j}
-                    for j in range(n)
-                ],
-                "5", "science", "1", "text",
-            )
-            for i, n in enumerate(sizes)
-        ]
-        return spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-
-    articles = mk([10 + (i * 7) % 41 for i in range(300)])          # 10..50
-    books = mk([900 + (i * 13) % 200 for i in range(300)])          # 900..1099
-    t_articles = profile_span_threshold(articles)
-    t_books = profile_span_threshold(books)
-    assert t_articles == 64  # floor: nothing here is worth salting
-    assert 900 <= t_books <= 1099  # adapted: a real observed span count
-    assert t_books > t_articles
-
-    # a fat tail lands the threshold inside the bulk, above it: the tail
-    # docs (and only they) take the salted path
-    tail_sizes = [20 + (i % 30) for i in range(500)] + [4000] * 2
-    tail = mk(tail_sizes)
-    t_tail = profile_span_threshold(tail, quantile=0.99)
-    assert max(s for s in tail_sizes if s < 4000) <= t_tail < 4000
-
-    # and auto-threshold extraction stays value-equal to the fused plan
-    mixed = corpus_df(spark, 24, seed=7, mega_every=8)
-
-    def inv(df):
-        return {
-            r["doc_id"]: [
-                (s.kind, s.text, s.media_ref, s.offset) for s in r["spans"]
-            ]
-            for r in df.select("doc_id", "spans").collect()
-        }
-
-    assert inv(
-        extract_documents_salted(mixed, span_threshold="auto")
-    ) == inv(extract_documents(mixed))
+    mega = gen_doc(23, 42, family="mega_doc")
+    empty = spark.createDataFrame([], DOCUMENTS_SCHEMA)
+    nulls, _ = _docs_df(spark, [(f"n{i}", None) for i in range(6)], 3)
+    single, _ = _docs_df(
+        spark, [(mega["doc_id"], mega["spans"])] + _plain_docs([5, 7, 9]), 1
+    )
+    assert mega_doc_cut(empty) == (DEFAULT_SPAN_THRESHOLD, 0)
+    assert mega_doc_cut(nulls) == (DEFAULT_SPAN_THRESHOLD, 0)
+    assert mega_doc_cut(single) == (len(mega["spans"]) + 21, len(mega["spans"]))
+    for df, n in ((empty, 0), (nulls, 6), (single, 4)):
+        out = extract_documents_salted(df)
+        got = _rows(out)
+        assert len(got) == n and got == _rows(extract_documents(df))
+        assert "chunk(" not in _executed_plan(out)
 
 
 def test_media_heavy_mega_doc_salted_engine_path(spark):

@@ -52,12 +52,25 @@ def main() -> int:
         extract_documents(corpus_df(spark, 8, seed=1)),
         note="**Exchange=0, one fused Arrow stage** between scan and sink.",
     )
-    from ai_textbook_processor_spark.operators.skew import extract_documents_salted
+    from ai_textbook_processor_spark.operators.skew import (
+        DEFAULT_SPAN_THRESHOLD,
+        extract_documents_salted,
+    )
     audit(
-        "extract_documents_salted (mega-doc path)",
+        "extract_documents_salted (default cut)",
         extract_documents_salted(corpus_df(spark, 8, seed=1)),
+        note="no doc of this corpus is larger than the median input partition, "
+        "so the default cut plans plain `extract_documents` (its pre-pass is a "
+        "job of its own).",
+    )
+    audit(
+        "extract_documents_salted (span_threshold=512, mega-doc path)",
+        extract_documents_salted(
+            corpus_df(spark, 8, seed=1, mega_every=4),
+            span_threshold=DEFAULT_SPAN_THRESHOLD,
+        ),
         note="exchanges belong only to the salted branch (chunk spread + regroup); "
-        "the small-doc branch keeps the fused zero-shuffle plan.",
+        "the small-doc branch keeps the zero-shuffle plan.",
     )
     for name, note in (
         ("s9_point_lookup", "pushdown: doc_id filter reaches the parquet scan"),
