@@ -91,14 +91,22 @@ ALL_FAMILIES = FAMILIES + ("mega_doc", "html_with_media")
 
 
 def _sentence(rng: random.Random, vocab, n_words: int) -> str:
-    # rng.choice(seq) is exactly seq[rng._randbelow(len(seq))] (CPython
-    # random.py) — binding _randbelow skips the method dispatch per word
-    # while drawing the identical PRNG sequence (goldens unchanged; ~25%
-    # off generation's hottest loop, r6).
-    rb = rng._randbelow
+    # rng.choice(seq) is exactly seq[rng._randbelow(len(seq))], and
+    # _randbelow is _randbelow_with_getrandbits (CPython random.py): draw
+    # getrandbits(n.bit_length()) until the draw is below n. Inlining that
+    # loop skips two Python calls per word while drawing the identical PRNG
+    # sequence (pinned by tests/test_properties.py).
+    getrandbits = rng.getrandbits
     n = len(vocab)
-    ws = [vocab[rb(n)] for _ in range(n_words)]
-    ws = [w for w in ws if w != "."]
+    k = n.bit_length()
+    ws = []
+    for _ in range(n_words):
+        r = getrandbits(k)
+        while r >= n:
+            r = getrandbits(k)
+        w = vocab[r]
+        if w != ".":
+            ws.append(w)
     return " ".join(ws).capitalize() + "."
 
 

@@ -17,10 +17,15 @@ over span lists:
   anchor offset (mirrors OCR markdown keeping figure refs in-stream at
   their source positions, ``utils/text_extract_MistralAI.py:29``).
 
-These functions are shared verbatim between the pure-Python golden-fixture
-producer (tests) and the Spark pandas-UDF wrappers (operators/extract.py),
-so Spark-vs-golden span equality holds by construction; the kernels
-themselves are pinned by hand-written expected outputs in tests/.
+These per-document functions are the reference: the pure-Python
+golden-fixture producer, the salted mega-doc chunk path (operators/skew.py)
+and the golden tests call them, and they are pinned by hand-written
+expected outputs in tests/. The Spark hot paths (the column Arrow UDF and
+the fused stage in operators/extract.py) run the columnar batch core
+(functions/columnar.py) instead, which applies the same rules to a whole
+Arrow batch and calls E1 here once per HTML fragment. Its equality with
+these kernels holds by test (tests/test_columnar.py: property tests and
+every corpus family), not by construction.
 
 Every function here is pure: no wall clock, no randomness, no I/O.
 Text is NFC-normalized and whitespace-collapsed for byte-stable goldens
@@ -30,15 +35,15 @@ Text is NFC-normalized and whitespace-collapsed for byte-stable goldens
 from __future__ import annotations
 
 import bisect
-import os
 import re
 import unicodedata
 from html import unescape as _html_unescape
 from html.parser import HTMLParser
 
-# 'fast' (default): regex tokenizer with automatic per-fragment fallback to
-# stdlib; 'stdlib': force the stdlib parser everywhere (golden producer).
-_HTML_PARSER_MODE = os.environ.get("SPARK_GRAFT_HTML_PARSER", "fast")
+# 'fast': regex tokenizer with automatic per-fragment fallback to stdlib;
+# 'stdlib': force the stdlib parser everywhere (the golden producer and the
+# tokenizer-equality tests set this attribute).
+_HTML_PARSER_MODE = "fast"
 
 # ---------------------------------------------------------------------------
 # Tunables (pinned by golden fixtures — change these and goldens change).
@@ -197,7 +202,7 @@ class _DomBuilder(HTMLParser):
 # construction for weird inputs, speed for the clean majority.
 # Equality is regression-tested across every corpus family and adversarial
 # fragments in tests/test_fast_html.py; force stdlib with
-# SPARK_GRAFT_HTML_PARSER=stdlib.
+# _HTML_PARSER_MODE = "stdlib".
 # ---------------------------------------------------------------------------
 
 _FAST_TAG_RE = re.compile(

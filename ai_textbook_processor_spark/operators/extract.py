@@ -1,11 +1,12 @@
 """Spark-side extraction operator (SURVEY.md §2.12 ``extract_spans``).
 
 One vectorized Arrow UDF is the whole hot path: an Arrow array of span
-lists in, an Arrow struct array of results out. Each document's spans arrive as a
-single cell, so the per-document kernels (functions/kernels.py) run inside
-the batch with no per-row Python UDF and no shuffle — extraction is
-embarrassingly parallel across partitions (the reference processes one
-document per HTTP request, serially: ``routes/route.py:79-102``).
+lists in, an Arrow struct array of results out. Each document's spans arrive
+as a single cell, and the columnar core (functions/columnar.py) extracts the
+whole batch at once with no per-row Python UDF and no shuffle — extraction
+is embarrassingly parallel across partitions (the reference processes one
+document per HTTP request, serially: ``routes/route.py:79-102``). The fused
+generate+extract+score stage below runs the same core.
 """
 
 from __future__ import annotations
@@ -14,18 +15,22 @@ import os
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
+from ..functions.columnar import (
+    SPANS_ARROW_TYPE,
+    TEXT_KINDS,
+    extract_batch,
+    joined_texts,
+)
 from ..functions.kernels import extract_document
 from ..functions.readability import CriteriaConfig, score_texts
 from ..schemas import SPANS_TYPE, VALIDATION_TYPE
 from ..session import udf_per_context
-
-TEXT_KINDS = ("heading", "body", "caption")
-
 
 @udf_per_context
 def extract_spans_udf():
@@ -90,24 +95,20 @@ def spans_array(docs, spans_type: pa.DataType) -> pa.ListArray:
     )
 
 
-def extract_result_columns(extracted, cfg: CriteriaConfig, types) -> dict:
+def extract_result_columns(extracted: pa.ListArray, texts: pa.Array,
+                           cfg: CriteriaConfig, types) -> dict:
     """The extraction columns (spans, n_spans, n_chars, validation) of a
-    batch as Arrow arrays, from its extracted documents: the one result
+    batch as Arrow arrays, from its extracted spans and each document's
+    joined text (``columnar.extract_batch``'s output): the one result
     builder of every extraction stage. ``types`` maps those column names to
     their Arrow types. Scoring stays vectorized: it runs on the batch's
-    extracted-text Series, not per row."""
-    texts = pd.Series(
-        [
-            " ".join(sp["text"] for sp in doc if sp["kind"] in TEXT_KINDS)
-            for doc in extracted
-        ]
-    )
-    scored = score_texts(texts, cfg)
+    text column, not per row."""
+    scored = score_texts(texts.to_pandas(), cfg)
     validation_type = types["validation"]
     return {
-        "spans": spans_array(extracted, types["spans"]),
-        "n_spans": pa.array([len(d) for d in extracted], type=pa.int32()),
-        "n_chars": pa.array(texts.str.len().astype("int32"), type=pa.int32()),
+        "spans": extracted,
+        "n_spans": pc.list_value_length(extracted).cast(pa.int32()),
+        "n_chars": pc.utf8_length(texts).cast(pa.int32()),
         "validation": pa.StructArray.from_arrays(
             [
                 pa.array(scored[f.name], type=f.type, from_pandas=True)
@@ -118,12 +119,30 @@ def extract_result_columns(extracted, cfg: CriteriaConfig, types) -> dict:
     }
 
 
-def extract_result_array(extracted, cfg: CriteriaConfig) -> pa.StructArray:
-    """``extract_result_columns`` as one EXTRACT_RESULT_TYPE struct array."""
-    cols = extract_result_columns(extracted, cfg, _RESULT_TYPES)
+def _result_array(extracted: pa.ListArray, texts: pa.Array,
+                  cfg: CriteriaConfig) -> pa.StructArray:
+    cols = extract_result_columns(extracted, texts, cfg, _RESULT_TYPES)
     return pa.StructArray.from_arrays(
         [cols[f.name] for f in _RESULT_ARROW_TYPE], fields=list(_RESULT_ARROW_TYPE)
     )
+
+
+def extract_result_array(spans, cfg: CriteriaConfig) -> pa.StructArray:
+    """One EXTRACT_RESULT_TYPE struct array from a batch of span-list cells,
+    extracted by the columnar core. ``spans`` is an Arrow list array or a
+    pandas Series of cells (``to_pandas()`` cells: an int field with nulls
+    arrives as float, which converts back exactly), so the UDF body also
+    runs on local data."""
+    if not isinstance(spans, (pa.Array, pa.ChunkedArray)):
+        spans = pa.array(list(spans), type=SPANS_ARROW_TYPE, from_pandas=True)
+    return _result_array(*extract_batch(spans), cfg)
+
+
+def documents_result_array(docs, cfg: CriteriaConfig) -> pa.StructArray:
+    """``extract_result_array`` for documents already extracted by the
+    per-document kernels (lists of span dicts)."""
+    extracted = spans_array(docs, SPANS_ARROW_TYPE)
+    return _result_array(extracted, joined_texts(extracted), cfg)
 
 
 def arrow_cells(col):
@@ -142,10 +161,7 @@ def arrow_cells(col):
 def make_extract_and_score_udf(cfg: CriteriaConfig):
     @F.arrow_udf(EXTRACT_RESULT_TYPE)
     def extract_and_score(spans: pa.Array) -> pa.Array:
-        return extract_result_array(
-            [extract_document(s) if s is not None else [] for s in arrow_cells(spans)],
-            cfg,
-        )
+        return extract_result_array(spans, cfg)
 
     return extract_and_score
 
@@ -159,7 +175,7 @@ def make_extract_and_score_udf(cfg: CriteriaConfig):
 # mapInArrow stage over the id range eliminates both crossings of the
 # heaviest column (guide §4.1/§2.3: shuffle/ship fewer bytes — here, zero
 # bytes of raw spans). Row values are identical by construction (same
-# gen_doc / extract_document / score_texts calls); pinned row-for-row by
+# gen_doc / extract_batch / score_texts calls); pinned row-for-row by
 # tests/test_fused_impl.py.
 # ---------------------------------------------------------------------------
 
@@ -245,7 +261,8 @@ def _drop_fused_pool():
 def _fused_compute_batch(ids, seed: int, mega_every: int, cfg: CriteriaConfig,
                          out_fields):
     """One slice of the fused stage: generate, extract and score ``ids``
-    into a pyarrow.RecordBatch built directly from the kernel outputs.
+    into a pyarrow.RecordBatch built directly from the columnar core's
+    output (one ``spans_array`` over the generated docs in).
     Each fork-helper slice becomes its own output batch, so the
     object->Arrow conversion (the single most expensive non-kernel step in
     the worker) runs in PARALLEL across the helpers instead of serially in
@@ -260,8 +277,10 @@ def _fused_compute_batch(ids, seed: int, mega_every: int, cfg: CriteriaConfig,
             else None
         )
         rows.append(gen_doc(int(idx), seed, family=fam))
-    extracted = [extract_document(r["spans"]) for r in rows]
-    cols = extract_result_columns(extracted, cfg, dict(out_fields))
+    extracted, texts = extract_batch(
+        spans_array([r["spans"] for r in rows], SPANS_ARROW_TYPE)
+    )
+    cols = extract_result_columns(extracted, texts, cfg, dict(out_fields))
     cols.update(
         doc_id=pa.array([r["doc_id"] for r in rows], type=pa.string()),
         standard=pa.array([r["standard"] for r in rows], type=pa.string()),
@@ -336,45 +355,6 @@ def make_generate_extract_score_batch_fn(cfg: CriteriaConfig, seed: int,
             raise
 
     return generate_extract_score_batches
-
-
-# ---------------------------------------------------------------------------
-# mapInArrow twin of the column UDF (r2 VERDICT #2), r3 verdict: PARITY
-# within noise, kept as an equality-pinned option. It runs the same body as
-# make_extract_and_score_udf (arrow_cells in, extract_result_columns out);
-# the difference is the plan: mapInArrow ships every passthrough column
-# through the worker socket both ways, where the UDF's ArrowEvalPython
-# ships only the spans column. Numbers in BENCH/BASELINE.md §r3;
-# tests/test_arrow_impl.py pins row-for-row equality with the UDF.
-# ---------------------------------------------------------------------------
-
-
-def make_extract_and_score_arrow_fn(cfg: CriteriaConfig, out_fields):
-    """Build the mapInArrow function emitting ``input columns (spans
-    replaced) + n_spans + n_chars + validation``. ``out_fields`` is the
-    list of (name, pyarrow.DataType) for the OUTPUT schema, computed on
-    the driver (pyspark.sql.pandas.types.to_arrow_type) and captured by
-    the closure so workers never re-derive schema."""
-    out_schema = pa.schema([pa.field(n, t) for n, t in out_fields])
-    types = dict(out_fields)
-
-    def extract_and_score_arrow(batches):
-        for batch in batches:
-            spans = arrow_cells(batch.column(batch.schema.get_field_index("spans")))
-            new_cols = extract_result_columns(
-                [extract_document(s) if s is not None else [] for s in spans],
-                cfg,
-                types,
-            )
-            arrays = [
-                new_cols[f.name]
-                if f.name in new_cols
-                else batch.column(batch.schema.get_field_index(f.name))
-                for f in out_schema
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-    return extract_and_score_arrow
 
 
 def extracted_text(spans_col: str | Column = "spans", sep: str = " ") -> Column:

@@ -39,13 +39,13 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.kernels import chunk_document, extract_text_spans, stitch_media
 # score_texts is not called here (reassembly scores through
-# extract_result_array) but stays a name of this module: layer timers and
+# documents_result_array) but stays a name of this module: layer timers and
 # out-of-Spark drivers of the salted path resolve the kernels through it
 from ..functions.readability import CriteriaConfig, score_texts  # noqa: F401
 from ..operators.extract import (
     EXTRACT_RESULT_TYPE,
     arrow_cells,
-    extract_result_array,
+    documents_result_array,
     spans_array,
 )
 from ..plans.pipeline import bucket_col, extract_documents, result_columns
@@ -192,7 +192,7 @@ def _reassemble_udf(cfg: CriteriaConfig):
                 for m in (media_spans if media_spans is not None else [])
             ]
             docs.append(stitch_media(text_spans, media_tuples))
-        return extract_result_array(docs, cfg)
+        return documents_result_array(docs, cfg)
 
     return reassemble
 

@@ -19,40 +19,29 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.readability import CriteriaConfig
-from ..operators.extract import (
-    EXTRACT_RESULT_TYPE,
-    make_extract_and_score_arrow_fn,
-    make_extract_and_score_udf,
-)
+from ..operators.extract import EXTRACT_RESULT_TYPE, make_extract_and_score_udf
 from ..operators.validate import is_valid_expr
 
 DEFAULT_BUCKETS = 32
 
 # Hot-path implementation: "fused" (default; generate+extract+score in ONE
 # Python stage when the input is a corpus_df-generated frame, falling back
-# to the column UDF otherwise), "pandas" (the column UDF: an Arrow UDF over
+# to the column UDF otherwise) or "pandas" (the column UDF: an Arrow UDF over
 # the spans column, planned as ArrowEvalPython; the name is from when it
-# was a pandas UDF), or "arrow" (mapInArrow twin). tests/test_arrow_impl.py
-# and tests/test_fused_impl.py pin row-for-row equality between them.
+# was a pandas UDF). tests/test_fused_impl.py pins row-for-row equality
+# between them.
 # r6 measurement (OPTIMIZATION_r06.md): fusing generation into the
 # extraction stage removes both Arrow crossings of the raw spans column
 # (generator out + extract UDF in) — the heaviest payload in the plan,
 # which extraction REPLACES anyway: 960k docs 35.7 s -> 29.9 s at 16 task
 # lanes, and the Python-bound fused stage then scales to 32 lanes (13.7 s)
 # where the boundary-heavy two-stage plan could not.
-# r3 measurement (BENCH/BASELINE.md): the mapInArrow twin measured at
-# PARITY with the then pandas UDF, although its raw to_pandas() input is
-# about 2x faster than the pandas serializer's per-struct list<struct>
-# conversion on pyspark 4.1.2 (BENCH/boundary_ab.json): mapInArrow ships
-# every passthrough column through the worker socket both ways (the
-# column UDF ships only the spans column), which ate that saving. The
-# column UDF now reads its input with the same raw to_pandas().
 DEFAULT_UDF_IMPL = "fused"
 
 
 def _resolve_impl(impl: str | None) -> str:
-    got = impl or os.environ.get("SPARK_GRAFT_UDF_IMPL", DEFAULT_UDF_IMPL)
-    if got not in ("arrow", "pandas", "fused"):
+    got = impl or DEFAULT_UDF_IMPL
+    if got not in ("pandas", "fused"):
         raise ValueError(f"unknown extract impl {got!r}")
     return got
 
@@ -163,35 +152,11 @@ def extract_documents(
         and "bucket" not in df.columns
     ):
         return _extract_generated(df.sparkSession, spec, cfg, n_buckets)
-    if resolved == "fused":
-        resolved = "pandas"  # fusion needs a generated corpus
-    # respect a caller-assigned bucket column (the resume runner buckets
+    # fusion needs a generated corpus; anything else takes the column UDF.
+    # Respect a caller-assigned bucket column (the resume runner buckets
     # with its own modulus before filtering groups)
     out = df if "bucket" in df.columns else with_bucket(df, n_buckets)
     if repartition:
         out = out.repartition(n_buckets, "bucket")
-    if resolved == "arrow":
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        result_fields = {f.name: f.dataType for f in EXTRACT_RESULT_TYPE.fields}
-        out_spark_fields = [
-            T.StructField(
-                f.name,
-                result_fields["spans"] if f.name == "spans" else f.dataType,
-                f.nullable,
-            )
-            for f in out.schema.fields
-        ] + [
-            T.StructField(n, result_fields[n])
-            for n in ("n_spans", "n_chars", "validation")
-        ]
-        out_fields = [
-            (f.name, to_arrow_type(f.dataType)) for f in out_spark_fields
-        ]
-        fn = make_extract_and_score_arrow_fn(cfg, out_fields)
-        out = out.mapInArrow(fn, T.StructType(out_spark_fields))
-        return out.withColumn(
-            "is_valid", is_valid_expr("validation", relaxed=cfg.relaxed_relevance)
-        )
     # one projection: spans replaced in place, the rest appended
     return out.withColumns(result_columns(make_extract_and_score_udf(cfg)("spans"), cfg))

@@ -1,12 +1,12 @@
-"""Equality gate for the mapInArrow hot path (r2 VERDICT #2).
+"""The hot-path implementation switch of ``extract_documents``.
 
-The pandas UDF is the golden twin; the Arrow implementation must be
-row-for-row, field-for-field identical on every corpus family — the same
-pin discipline as test_fast_html.py for the fast tokenizer. The sf
-literal oracles (x1/x2/g1/tp1) independently check the DEFAULT path
-against pure-Python tables, so the twin here guards the non-default one
-too, whichever way the default points.
+``impl`` is "fused" (generate+extract+score in one stage for corpus_df
+frames) or "pandas" (the column Arrow UDF); tests/test_fused_impl.py pins
+row-for-row equality between them, and tests/test_columnar.py pins the
+columnar core both run against the per-document kernels.
 """
+
+import pytest
 
 from ai_textbook_processor_spark.corpus import corpus_df
 from ai_textbook_processor_spark.plans.pipeline import (
@@ -18,39 +18,10 @@ from ai_textbook_processor_spark.plans.pipeline import (
 def test_default_is_fused():
     # r6: generate+extract+score fuses into one Python stage for generated
     # corpora (see pipeline.py comment + OPTIMIZATION_r06.md); non-generated
-    # inputs fall back to the golden pandas twin
+    # inputs fall back to the column UDF
     assert DEFAULT_UDF_IMPL == "fused"
 
 
-def test_arrow_equals_pandas_on_every_family(spark):
-    # 65 docs = 5 full passes over the 13 corpus families (incl. mega docs
-    # and html_with_media)
-    docs = corpus_df(spark, 65, seed=21)
-    a = extract_documents(docs, impl="arrow").orderBy("doc_id").collect()
-    p = extract_documents(docs, impl="pandas").orderBy("doc_id").collect()
-    assert len(a) == len(p) == 65
-    for ra, rp in zip(a, p):
-        assert ra == rp, (ra["doc_id"],)
-
-
-def test_arrow_schema_matches_pandas(spark):
-    docs = corpus_df(spark, 2, seed=1)
-    sa = extract_documents(docs, impl="arrow").schema
-    sp = extract_documents(docs, impl="pandas").schema
-    assert [ (f.name, f.dataType) for f in sa.fields ] == [
-        (f.name, f.dataType) for f in sp.fields
-    ]
-
-
-def test_impl_env_override(spark, monkeypatch):
-    docs = corpus_df(spark, 2, seed=1)
-    monkeypatch.setenv("SPARK_GRAFT_UDF_IMPL", "pandas")
-    plan = (
-        extract_documents(docs)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "ArrowEvalPython" in plan and "MapInArrow" not in plan
-    monkeypatch.setenv("SPARK_GRAFT_UDF_IMPL", "arrow")
-    plan = (
-        extract_documents(docs)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "MapInArrow" in plan and "ArrowEvalPython" not in plan
+def test_unknown_impl_is_rejected(spark):
+    with pytest.raises(ValueError, match="arrow"):
+        extract_documents(corpus_df(spark, 2, seed=1), impl="arrow")

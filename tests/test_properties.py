@@ -1,5 +1,8 @@
 """Property tests over the corpus generator + kernels (SURVEY.md §5.2.2)."""
 
+import hashlib
+import json
+
 from hypothesis import given, settings
 
 # derandomized: the driver's gate must not fail on a novel random example;
@@ -18,6 +21,21 @@ def _doc(idx: int, family: str) -> dict:
 
 families = st.sampled_from(ALL_FAMILIES)
 small_idx = st.integers(min_value=0, max_value=500)
+
+
+# sha256 of json.dumps(gen_doc(idx, seed, family), sort_keys=True) over
+# seeds (1, 42, 99) x ALL_FAMILIES x idx 0-7: the generator's documents are
+# byte-identical to those every pinned fixture and benchmark was made from.
+GEN_DOC_SHA256 = "3148cc8f3c853e31716e6886d9ee71c8dae084b4b689be790ace9db8345d5ecb"
+
+
+def test_generator_output_pinned():
+    h = hashlib.sha256()
+    for seed in (1, 42, 99):
+        for fam in ALL_FAMILIES:
+            for idx in range(8):
+                h.update(json.dumps(gen_doc(idx, seed, family=fam), sort_keys=True).encode())
+    assert h.hexdigest() == GEN_DOC_SHA256
 
 
 @settings(max_examples=60, deadline=None, derandomize=True)
