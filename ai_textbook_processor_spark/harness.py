@@ -1445,10 +1445,9 @@ def x1_extract_pipeline(spark, sf_dir):
 def x2_extract_span_stats(spark, sf_dir):
     """Aggregate span-kind histogram of the extraction output (media
     conservation observable: one figure per input doc)."""
-    from .operators.extract import extract_spans_udf
+    from .plans.pipeline import extract_documents
 
-    docs = _interleaved_from_documents(spark, sf_dir)
-    out = docs.withColumn("spans", extract_spans_udf()("spans"))
+    out = extract_documents(_interleaved_from_documents(spark, sf_dir))
     return (
         out.select(F.explode("spans").alias("s"))
         .groupBy(F.col("s.kind").alias("kind"))

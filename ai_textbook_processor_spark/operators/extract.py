@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column
@@ -27,21 +26,13 @@ from ..functions.columnar import (
     extract_batch,
     joined_texts,
 )
-from ..functions.kernels import extract_document
+# extract_document is not called here (the columnar core extracts every
+# batch) but stays a name of this module: the benchmark's traced runs wrap
+# the per-document dispatch kernel through it
+from ..functions.kernels import extract_document  # noqa: F401
 from ..functions.readability import CriteriaConfig, score_texts
 from ..schemas import SPANS_TYPE, VALIDATION_TYPE
 from ..session import udf_per_context
-
-@udf_per_context
-def extract_spans_udf():
-    @F.pandas_udf(SPANS_TYPE)
-    def extract_spans(spans: pd.Series) -> pd.Series:
-        return pd.Series(
-            [extract_document(s) if s is not None else [] for s in spans],
-            index=spans.index,
-        )
-
-    return extract_spans
 
 
 # Fused extract+score output: ONE Python stage for the whole hot path.

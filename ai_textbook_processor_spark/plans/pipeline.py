@@ -24,34 +24,21 @@ from ..operators.validate import is_valid_expr
 
 DEFAULT_BUCKETS = 32
 
-# Hot-path implementation: "fused" (default; generate+extract+score in ONE
-# Python stage when the input is a corpus_df-generated frame, falling back
-# to the column UDF otherwise) or "pandas" (the column UDF: an Arrow UDF over
-# the spans column, planned as ArrowEvalPython; the name is from when it
-# was a pandas UDF). tests/test_fused_impl.py pins row-for-row equality
-# between them.
-# r6 measurement (OPTIMIZATION_r06.md): fusing generation into the
-# extraction stage removes both Arrow crossings of the raw spans column
-# (generator out + extract UDF in) — the heaviest payload in the plan,
-# which extraction REPLACES anyway: 960k docs 35.7 s -> 29.9 s at 16 task
-# lanes, and the Python-bound fused stage then scales to 32 lanes (13.7 s)
-# where the boundary-heavy two-stage plan could not.
-DEFAULT_UDF_IMPL = "fused"
-
-
-def _resolve_impl(impl: str | None) -> str:
-    got = impl or DEFAULT_UDF_IMPL
-    if got not in ("pandas", "fused"):
-        raise ValueError(f"unknown extract impl {got!r}")
-    return got
-
 
 def _extract_generated(spark, spec, cfg: CriteriaConfig,
                        n_buckets: int) -> DataFrame:
     """Fused plan for a corpus_df-generated input: ONE mapInArrow stage
     (generate -> extract -> score), then JVM-side bucket/is_valid columns.
     Output schema, column order and row values are identical to the
-    unfused path (pinned by tests/test_fused_impl.py)."""
+    column-UDF plan over the same documents read from parquet (pinned by
+    tests/test_fused_impl.py).
+
+    r6 measurement (OPTIMIZATION_r06.md): fusing generation into the
+    extraction stage removes both Arrow crossings of the raw spans column
+    (generator out + extract UDF in) — the heaviest payload in the plan,
+    which extraction REPLACES anyway: 960k docs 35.7 s -> 29.9 s at 16 task
+    lanes, and the Python-bound fused stage then scales to 32 lanes
+    (13.7 s) where the boundary-heavy two-stage plan could not."""
     from ..schemas import DOCUMENTS_SCHEMA
 
     result_fields = {f.name: f.dataType for f in EXTRACT_RESULT_TYPE.fields}
@@ -132,7 +119,6 @@ def extract_documents(
     cfg: CriteriaConfig | None = None,
     n_buckets: int = DEFAULT_BUCKETS,
     repartition: bool = False,
-    impl: str | None = None,
 ) -> DataFrame:
     """The flagship plan: documents_interleaved -> extracted + validation.
 
@@ -143,14 +129,8 @@ def extract_documents(
     plan is shuffle-free end to end; resume/lineage address the same
     buckets either way)."""
     cfg = cfg or CriteriaConfig()
-    resolved = _resolve_impl(impl)
     spec = getattr(df, "_sg_gen_spec", None)
-    if (
-        resolved == "fused"
-        and spec is not None
-        and not repartition
-        and "bucket" not in df.columns
-    ):
+    if spec is not None and not repartition and "bucket" not in df.columns:
         return _extract_generated(df.sparkSession, spec, cfg, n_buckets)
     # fusion needs a generated corpus; anything else takes the column UDF.
     # Respect a caller-assigned bucket column (the resume runner buckets

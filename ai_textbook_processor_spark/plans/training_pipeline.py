@@ -192,20 +192,12 @@ def _stages_from_extracted(
     # Round-robin to the session's shuffle width: every consumer of
     # ``winners`` is integer/hash-domain (signature mins, band joins,
     # funnel count sums — all commutative) or a key join, so the layout
-    # is value-invisible; width follows spark.sql.shuffle.partitions.
-    # Env toggle exists for the same-session A/B harness only.
-    import os as _os
-
-    _mode = _os.environ.get("SPARK_GRAFT_SPREAD_WINNERS", "ckpt")
-    if _mode not in ("0", "1", "ckpt"):
-        raise ValueError(
-            f"SPARK_GRAFT_SPREAD_WINNERS={_mode!r}: expected '0', '1' or 'ckpt'"
-        )
-    if _mode in ("1", "ckpt"):
-        n_spread = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        winners = winners.repartition(n_spread)
-        if _mode == "ckpt":
-            winners = winners.localCheckpoint(eager=False)
+    # is value-invisible; width follows spark.sql.shuffle.partitions. The
+    # spread alone measured slower on tp1 (its 4+ consumers each re-ran the
+    # window and exchange); with the lazy checkpoint, tp1 4/4 interleaved
+    # pairs 6.05 -> 5.30 s, tp2 3/4.
+    n_spread = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    winners = winners.repartition(n_spread).localCheckpoint(eager=False)
 
     # near-dup dedup: LSH candidates -> connected components -> keep the
     # component's canonical (minimum) doc_id

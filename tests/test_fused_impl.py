@@ -1,10 +1,11 @@
 """Equality gate for the fused generate+extract+score stage (r6).
 
-The two-stage plan (corpus mapInPandas -> extract pandas UDF) is the
-golden twin; the fused single-stage plan must be row-for-row, field-for-
-field identical on every corpus family, including mega docs, start
-offsets and non-default configs — the same pin discipline as
-test_arrow_impl.py for the mapInArrow twin.
+The column-UDF plan over the same documents read back from parquet (the
+production input of that plan) is the golden twin; the fused single-stage
+plan must be row-for-row, field-for-field identical on every corpus
+family, including mega docs, start offsets and non-default configs.
+tests/test_columnar.py pins the columnar core both plans run against the
+per-document kernels.
 """
 
 from ai_textbook_processor_spark.corpus import corpus_df
@@ -16,24 +17,35 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_fused_equals_pandas_on_every_family(spark):
+def _parquet_copy(spark, docs, path):
+    """``docs`` written to parquet and read back: the same documents as a
+    frame the column UDF extracts."""
+    docs.write.parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
+def test_fused_equals_pandas_on_every_family(spark, tmp_path):
     # 65 docs = 5 full passes over the 13 corpus families; mega_every=13
     # plants 5 mega docs; start offset + non-default cfg exercise the
     # GenSpec plumbing and the relaxed is_valid gate
     cfg = CriteriaConfig(grade_lo=0.0, grade_hi=9.0, relaxed_relevance=True)
     docs = corpus_df(spark, 65, seed=21, mega_every=13, start=7,
                      num_partitions=5)
-    f = extract_documents(docs, cfg, impl="fused").orderBy("doc_id").collect()
-    p = extract_documents(docs, cfg, impl="pandas").orderBy("doc_id").collect()
+    table = _parquet_copy(spark, docs, tmp_path / "docs")
+    fused = extract_documents(docs, cfg)
+    column = extract_documents(table, cfg)
+    assert "MapInArrow" in _plan(fused) and "ArrowEvalPython" in _plan(column)
+    f = fused.orderBy("doc_id").collect()
+    p = column.orderBy("doc_id").collect()
     assert len(f) == len(p) == 65
     for rf, rp in zip(f, p):
         assert rf == rp, (rf["doc_id"],)
 
 
-def test_fused_schema_matches_pandas(spark):
+def test_fused_schema_matches_pandas(spark, tmp_path):
     docs = corpus_df(spark, 2, seed=1)
-    sf = extract_documents(docs, impl="fused").schema
-    sp = extract_documents(docs, impl="pandas").schema
+    sf = extract_documents(docs).schema
+    sp = extract_documents(_parquet_copy(spark, docs, tmp_path / "docs")).schema
     assert [(f.name, f.dataType) for f in sf.fields] == [
         (f.name, f.dataType) for f in sp.fields
     ]
@@ -49,7 +61,7 @@ def test_fused_plan_is_single_python_stage(spark):
 
 def test_fused_falls_back_without_gen_spec(spark):
     # a frame NOT produced by corpus_df (here: any derived frame — the tag
-    # does not survive transformations) must take the pandas-UDF path
+    # does not survive transformations) must take the column-UDF path
     docs = corpus_df(spark, 4, seed=3).where("doc_id is not null")
     plan = _plan(extract_documents(docs))
     assert "ArrowEvalPython" in plan and plan.count("MapInPandas") == 1
@@ -85,12 +97,12 @@ def test_fused_multibatch_helpers_equal_serial(spark):
     try:
         os.environ["SPARK_GRAFT_FUSED_PROCS"] = "2"
         try:
-            helpers = extract_documents(docs, impl="fused").collect()
+            helpers = extract_documents(docs).collect()
         finally:
             del os.environ["SPARK_GRAFT_FUSED_PROCS"]
     finally:
         spark.conf.set(key, old)
-    serial = extract_documents(docs, impl="fused").collect()
+    serial = extract_documents(docs).collect()
     assert len(helpers) == len(serial) == 1040
     assert helpers == serial
 
@@ -105,10 +117,10 @@ def test_fused_parallel_helper_equals_serial(spark):
     docs = corpus_df(spark, 520, seed=5, mega_every=130, num_partitions=2)
     os.environ["SPARK_GRAFT_FUSED_PROCS"] = "2"
     try:
-        par = extract_documents(docs, impl="fused").collect()
+        par = extract_documents(docs).collect()
     finally:
         del os.environ["SPARK_GRAFT_FUSED_PROCS"]
-    ser = extract_documents(docs, impl="fused").collect()
+    ser = extract_documents(docs).collect()
     assert len(par) == len(ser) == 520
     assert par == ser
 
@@ -314,7 +326,7 @@ docs = corpus_df(spark, 2 * 5 * 2 * _MIN_SPLIT, seed=13, mega_every=640, num_par
 extract.make_generate_extract_score_batch_fn = killing_batch_fn
 os.environ["SPARK_GRAFT_FUSED_PROCS"] = "2"
 spark.sparkContext.setJobGroup("helper_kill", "fused stage with a killed helper")
-killed = rows(extract_documents(docs, impl="fused"))
+killed = rows(extract_documents(docs))
 sc = spark.sparkContext
 tracker = sc.statusTracker()
 failed_tasks = sum(
@@ -325,7 +337,7 @@ failed_tasks = sum(
 extract.make_generate_extract_score_batch_fn = real_batch_fn
 del os.environ["SPARK_GRAFT_FUSED_PROCS"]
 sc.setJobGroup("serial", "fused stage without helpers")
-serial = rows(extract_documents(docs, impl="fused"))
+serial = rows(extract_documents(docs))
 with open(attempts) as f:
     retried = sorted({line.split()[0] for line in f if line.split()[1] != "0"})
 print(json.dumps({

@@ -20,7 +20,6 @@ import json
 from pyspark.sql import functions as F
 
 from ai_textbook_processor_spark.corpus import corpus_df
-from ai_textbook_processor_spark.operators.extract import extract_spans_udf
 from ai_textbook_processor_spark.operators.generate import with_generation
 from ai_textbook_processor_spark.operators.skew import extract_documents_salted
 from ai_textbook_processor_spark.session import get_spark
@@ -29,18 +28,13 @@ from ai_textbook_processor_spark.session import get_spark
 def run():
     spark = get_spark(master="local[2]", shuffle_partitions=2)
     docs = corpus_df(spark, 24, seed=7, mega_every=12)
-    # small docs: the extract+score pandas UDF; mega docs: chunk, partial
+    # small docs: the extract+score Arrow UDF; mega docs: chunk, partial
     # and reassemble UDFs
     out = extract_documents_salted(docs, span_threshold=64, max_units_per_chunk=16)
     out = with_generation(out, F.col("validation.reason"), n_items=2)
-    out = out.join(
-        docs.select("doc_id", extract_spans_udf()("spans").alias("raw_spans")), "doc_id"
-    )
     rows = sorted(
         json.dumps(r.asDict(recursive=True), sort_keys=True)
-        for r in out.select(
-            "doc_id", "spans", "raw_spans", "validation", "generated"
-        ).collect()
+        for r in out.select("doc_id", "spans", "validation", "generated").collect()
     )
     spark.stop()
     return rows
