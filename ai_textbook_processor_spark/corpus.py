@@ -5,11 +5,15 @@ Every document is generated from a seeded per-document PRNG keyed by
 partitioning, so the same (seed, n_docs) always yields byte-identical
 corpora. No wall clock, no global randomness.
 
-Two entry points:
+Three entry points:
 * ``gen_doc(idx, seed)`` — one document as plain Python (used by tests and
   the golden producer).
+* ``gen_batch(ids, seed, mega_every)`` — the documents of a batch of ids as
+  one Arrow ``RecordBatch`` of ``DOCUMENTS_SCHEMA``: the one step from doc
+  ids to documents, shared by ``corpus_df`` and the fused
+  generate+extract+score stage (operators/extract.py).
 * ``corpus_df(spark, n_docs, seed)`` — distributed generation with
-  ``mapInPandas`` over ``spark.range`` (executor-side; the driver never
+  ``mapInArrow`` over ``spark.range`` (executor-side; the driver never
   materializes the corpus), used by bench and the pipeline at scale.
 """
 
@@ -18,9 +22,14 @@ from __future__ import annotations
 import random
 from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from .functions.columnar import SPANS_ARROW_TYPE, spans_array
 from .schemas import DOCUMENTS_SCHEMA
+
+_DOCUMENTS_ARROW_SCHEMA = to_arrow_schema(DOCUMENTS_SCHEMA)
 
 
 class GenSpec(NamedTuple):
@@ -345,6 +354,27 @@ def gen_doc(idx: int, seed: int = 42, family: str | None = None) -> dict:
     }
 
 
+def gen_batch(ids, seed: int = 42, mega_every: int = 0) -> pa.RecordBatch:
+    """The documents of ``ids`` (Python ints) as one Arrow batch with the
+    ``DOCUMENTS_SCHEMA`` columns. ``mega_every > 0`` makes every k-th
+    document a mega_doc (skew fixture). ``gen_doc`` is looked up in this
+    module on every call, so a wrapper put on ``corpus.gen_doc`` sees each
+    document."""
+    docs = []
+    for idx in ids:
+        mega = mega_every and idx % mega_every == mega_every - 1
+        docs.append(gen_doc(idx, seed, family="mega_doc" if mega else None))
+    return pa.RecordBatch.from_arrays(
+        [
+            spans_array([d["spans"] for d in docs], SPANS_ARROW_TYPE)
+            if f.name == "spans"
+            else pa.array([d[f.name] for d in docs], f.type)
+            for f in _DOCUMENTS_ARROW_SCHEMA
+        ],
+        schema=_DOCUMENTS_ARROW_SCHEMA,
+    )
+
+
 def corpus_df(
     spark: SparkSession,
     n_docs: int,
@@ -360,30 +390,15 @@ def corpus_df(
     ``start`` offsets the doc index range — disjoint [start, start+n) slices
     of the same logical corpus, for multi-process scaling runs.
     """
-    import pandas as pd  # local import: executors need it lazily
-
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    base = spark.range(start, start + n_docs, 1, n_parts)
 
-    def gen_batches(it):
-        for pdf in it:
-            rows = []
-            for idx in pdf["id"].tolist():
-                fam = (
-                    "mega_doc"
-                    if (mega_every and idx % mega_every == mega_every - 1)
-                    else None
-                )
-                rows.append(gen_doc(int(idx), seed, family=fam))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "spans", "standard", "subject", "chapter",
-                    "content_type",
-                ],
-            )
+    def gen_batches(batches):
+        for batch in batches:
+            yield gen_batch(batch.column(0).to_pylist(), seed, mega_every)
 
-    df = base.mapInPandas(gen_batches, schema=DOCUMENTS_SCHEMA)
+    df = spark.range(start, start + n_docs, 1, n_parts).mapInArrow(
+        gen_batches, DOCUMENTS_SCHEMA
+    )
     # Fusion tag (see GenSpec): consumed by extract_documents to run
     # generate+extract+score as ONE Python stage. Plain attribute on the
     # DataFrame wrapper — downstream transformations produce new wrappers,

@@ -47,6 +47,42 @@ SPAN_ARROW_TYPE = pa.struct(
 )
 SPANS_ARROW_TYPE = pa.list_(SPAN_ARROW_TYPE)
 
+
+def spans_array(docs, spans_type: pa.DataType) -> pa.ListArray:
+    """The ``list<struct>`` spans column of ``docs`` (per-document lists of
+    span dicts), built from flattened parallel lists plus an offsets array
+    instead of letting ``pa.array`` infer from the dicts: 15x faster (5 ms
+    vs 76 ms per 2.7k-doc slice), identical array (pinned by
+    tests/test_corpus.py)."""
+    span_struct = spans_type.value_type
+    offsets = [0]
+    kinds: list = []
+    txts: list = []
+    refs: list = []
+    offs: list = []
+    n_flat = 0
+    for doc in docs:
+        n_flat += len(doc)
+        offsets.append(n_flat)
+        for sp in doc:
+            kinds.append(sp["kind"])
+            txts.append(sp["text"])
+            refs.append(sp["media_ref"])
+            offs.append(sp["offset"])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, type=pa.int32()),
+        pa.StructArray.from_arrays(
+            [
+                pa.array(kinds, type=pa.string()),
+                pa.array(txts, type=pa.string()),
+                pa.array(refs, type=pa.string()),
+                pa.array(offs, type=pa.int32()),
+            ],
+            fields=list(span_struct),
+        ),
+    )
+
+
 # output kind codes; the first three are the kinds E4 scores
 OUT_KINDS = ("heading", "body", "caption", "figure", "table")
 TEXT_KINDS = OUT_KINDS[:3]

@@ -237,15 +237,6 @@ class _BitReader:
         self.bits = 0
         self.nbits = 0
 
-    def decode_huff(self, table) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise JpegUnsupported("invalid Huffman code in entropy stream")
-
     def decode_huff_fast(self, fast) -> int:
         mincode, maxcode, valptr, symbols = fast
         if self.nbits < 16:

@@ -128,6 +128,22 @@ def main(argv: list[str] | None = None) -> int:
         "plans the plain one-stage path when there is none)",
     )
     args = ap.parse_args(argv)
+    # the resumable and clean-corpus branches return before these flags are
+    # read: reject them there instead of ignoring them
+    plain_only = [
+        flag
+        for flag, given in (
+            ("--salted", args.salted),
+            ("--span-threshold", args.span_threshold is not None),
+            ("--sink noop", args.sink == "noop"),
+        )
+        if given
+    ]
+    mode = "--resumable" if args.resumable else "--clean-corpus" if args.clean_corpus else None
+    if mode and plain_only:
+        ap.error(f"{plain_only[0]} cannot be combined with {mode}")
+    if args.span_threshold is not None and not args.salted:
+        ap.error("--span-threshold needs --salted")
 
     spark = get_spark(app_name="extract_job", master=args.master)
     if args.warmup:

@@ -20,11 +20,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
+from ..corpus import gen_batch
 from ..functions.columnar import (
     SPANS_ARROW_TYPE,
     TEXT_KINDS,
     extract_batch,
     joined_texts,
+    spans_array,
 )
 # extract_document is not called here (the columnar core extracts every
 # batch) but stays a name of this module: the benchmark's traced runs wrap
@@ -49,41 +51,6 @@ EXTRACT_RESULT_TYPE = T.StructType(
 
 _RESULT_ARROW_TYPE = to_arrow_type(EXTRACT_RESULT_TYPE)
 _RESULT_TYPES = {f.name: f.type for f in _RESULT_ARROW_TYPE}
-
-
-def spans_array(docs, spans_type: pa.DataType) -> pa.ListArray:
-    """The ``list<struct>`` spans column of ``docs`` (per-document lists of
-    span dicts), built from flattened parallel lists plus an offsets array
-    instead of letting ``pa.array`` infer from the dicts: 15x faster (5 ms
-    vs 76 ms per 2.7k-doc slice), identical array (pinned by
-    tests/test_fused_impl.py)."""
-    span_struct = spans_type.value_type
-    offsets = [0]
-    kinds: list = []
-    txts: list = []
-    refs: list = []
-    offs: list = []
-    n_flat = 0
-    for doc in docs:
-        n_flat += len(doc)
-        offsets.append(n_flat)
-        for sp in doc:
-            kinds.append(sp["kind"])
-            txts.append(sp["text"])
-            refs.append(sp["media_ref"])
-            offs.append(sp["offset"])
-    return pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int32()),
-        pa.StructArray.from_arrays(
-            [
-                pa.array(kinds, type=pa.string()),
-                pa.array(txts, type=pa.string()),
-                pa.array(refs, type=pa.string()),
-                pa.array(offs, type=pa.int32()),
-            ],
-            fields=list(span_struct),
-        ),
-    )
 
 
 def extract_result_columns(extracted: pa.ListArray, texts: pa.Array,
@@ -166,7 +133,7 @@ def make_extract_and_score_udf(cfg: CriteriaConfig):
 # mapInArrow stage over the id range eliminates both crossings of the
 # heaviest column (guide §4.1/§2.3: shuffle/ship fewer bytes — here, zero
 # bytes of raw spans). Row values are identical by construction (same
-# gen_doc / extract_batch / score_texts calls); pinned row-for-row by
+# gen_batch / extract_batch / score_texts calls); pinned row-for-row by
 # tests/test_fused_impl.py.
 # ---------------------------------------------------------------------------
 
@@ -251,34 +218,17 @@ def _drop_fused_pool():
 
 def _fused_compute_batch(ids, seed: int, mega_every: int, cfg: CriteriaConfig,
                          out_fields):
-    """One slice of the fused stage: generate, extract and score ``ids``
-    into a pyarrow.RecordBatch built directly from the columnar core's
-    output (one ``spans_array`` over the generated docs in).
-    Each fork-helper slice becomes its own output batch, so the
-    object->Arrow conversion (the single most expensive non-kernel step in
-    the worker) runs in PARALLEL across the helpers instead of serially in
-    the worker thread after reassembly."""
-    from ..corpus import gen_doc
-
-    rows = []
-    for idx in ids:
-        fam = (
-            "mega_doc"
-            if (mega_every and idx % mega_every == mega_every - 1)
-            else None
-        )
-        rows.append(gen_doc(int(idx), seed, family=fam))
-    extracted, texts = extract_batch(
-        spans_array([r["spans"] for r in rows], SPANS_ARROW_TYPE)
-    )
-    cols = extract_result_columns(extracted, texts, cfg, dict(out_fields))
-    cols.update(
-        doc_id=pa.array([r["doc_id"] for r in rows], type=pa.string()),
-        standard=pa.array([r["standard"] for r in rows], type=pa.string()),
-        subject=pa.array([r["subject"] for r in rows], type=pa.string()),
-        chapter=pa.array([r["chapter"] for r in rows], type=pa.string()),
-        content_type=pa.array([r["content_type"] for r in rows], type=pa.string()),
-    )
+    """One slice of the fused stage: ``corpus.gen_batch`` generates ``ids``,
+    the columnar core extracts the batch's spans column and the result
+    builder scores it; the output batch is the document columns with spans
+    replaced by the extraction columns. Each fork-helper slice becomes its
+    own output batch, so the object->Arrow conversion (the single most
+    expensive non-kernel step in the worker) runs in PARALLEL across the
+    helpers instead of serially in the worker thread after reassembly."""
+    docs = gen_batch(ids, seed, mega_every)
+    cols = dict(zip(docs.schema.names, docs.columns))
+    extracted, texts = extract_batch(cols["spans"])
+    cols.update(extract_result_columns(extracted, texts, cfg, dict(out_fields)))
     schema = pa.schema([pa.field(n, t) for n, t in out_fields])
     return pa.RecordBatch.from_arrays(
         [cols[n] for n, _t in out_fields], schema=schema

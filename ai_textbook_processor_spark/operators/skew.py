@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
+from ..functions.columnar import spans_array
 from ..functions.kernels import chunk_document, extract_text_spans, stitch_media
 # score_texts is not called here (reassembly scores through
 # documents_result_array) but stays a name of this module: layer timers and
@@ -46,7 +47,6 @@ from ..operators.extract import (
     EXTRACT_RESULT_TYPE,
     arrow_cells,
     documents_result_array,
-    spans_array,
 )
 from ..plans.pipeline import bucket_col, extract_documents, result_columns
 from ..schemas import SPANS_TYPE
@@ -206,7 +206,6 @@ def extract_documents_salted(
     span_threshold: int | str = "auto",
     max_units_per_chunk: int = DEFAULT_UNITS_PER_CHUNK,
     n_buckets: int = 32,
-    chunk_partitions: int | None = None,
 ) -> DataFrame:
     """Skew-aware extraction: the one-stage plan for normal docs, salted
     split/reassemble for docs above ``span_threshold`` spans. Output schema
@@ -235,7 +234,7 @@ def extract_documents_salted(
         *_META_COLS,
         F.posexplode(_chunk_udf(max_units_per_chunk)("spans")).alias("_i", "c"),
     )
-    n_parts = chunk_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     chunked = chunked.repartition(n_parts, "doc_id", F.col("c.chunk_idx"))
     partials = chunked.select(
         "doc_id",

@@ -1,13 +1,12 @@
 """End-to-end extraction plan (SURVEY.md §3.1 Spark re-expression).
 
-read documents -> repartition by hash(doc_id) (explicit bucket column so
+read documents -> bucket column pmod(xxhash64(doc_id), n) (so
 resume/lineage can address partitions) -> extract+score Arrow UDF ->
 validation struct -> valid/quarantine split -> write + lineage.
 
-The only shuffle in the whole plan is the optional bucket repartition; the
-extraction UDF itself is narrow. At cluster scale the input is an Iceberg
-table bucket-partitioned by doc_id, so even that shuffle disappears
-(scan-aligned buckets); locally we emulate with repartition(expr).
+The plan has no shuffle: the extraction UDF is narrow, and at cluster scale
+the input is an Iceberg table bucket-partitioned by doc_id, so its scan is
+already aligned with the buckets.
 """
 
 from __future__ import annotations
@@ -81,15 +80,15 @@ def _extract_generated(spark, spec, cfg: CriteriaConfig,
     fn = make_generate_extract_score_batch_fn(
         cfg, spec.seed, spec.mega_every, out_fields, procs=procs
     )
-    out = base.mapInArrow(fn, out_schema)
-    # bucket is JVM-side (xxhash64) and must sit between the document
-    # columns and the extraction columns to match the unfused column order
-    out = with_bucket(out, n_buckets)
-    doc_cols = [f.name for f in DOCUMENTS_SCHEMA.fields]
-    return out.select(
-        *doc_cols, "bucket", "n_spans", "n_chars", "validation"
-    ).withColumn(
-        "is_valid", is_valid_expr("validation", relaxed=cfg.relaxed_relevance)
+    # one projection: bucket is JVM-side (xxhash64) and sits between the
+    # document columns and the extraction columns, the unfused column order
+    return base.mapInArrow(fn, out_schema).select(
+        *[f.name for f in DOCUMENTS_SCHEMA.fields],
+        bucket_col(n_buckets).alias("bucket"),
+        "n_spans",
+        "n_chars",
+        "validation",
+        is_valid_expr("validation", relaxed=cfg.relaxed_relevance).alias("is_valid"),
     )
 
 
@@ -118,25 +117,19 @@ def extract_documents(
     df: DataFrame,
     cfg: CriteriaConfig | None = None,
     n_buckets: int = DEFAULT_BUCKETS,
-    repartition: bool = False,
 ) -> DataFrame:
     """The flagship plan: documents_interleaved -> extracted + validation.
 
-    One fused Arrow-UDF stage (extract E1-E3 + score E4), zero shuffles by
-    default. ``repartition=True`` adds the hash(doc_id) bucket shuffle —
-    needed only when the input isn't already bucket-partitioned (an Iceberg
-    table bucketed by doc_id arrives pre-partitioned, so the production
-    plan is shuffle-free end to end; resume/lineage address the same
-    buckets either way)."""
+    One fused Arrow-UDF stage (extract E1-E3 + score E4) and no shuffle:
+    an Iceberg table bucketed by doc_id arrives pre-partitioned, and
+    resume/lineage address the same ``bucket`` column."""
     cfg = cfg or CriteriaConfig()
     spec = getattr(df, "_sg_gen_spec", None)
-    if spec is not None and not repartition and "bucket" not in df.columns:
+    if spec is not None and "bucket" not in df.columns:
         return _extract_generated(df.sparkSession, spec, cfg, n_buckets)
     # fusion needs a generated corpus; anything else takes the column UDF.
     # Respect a caller-assigned bucket column (the resume runner buckets
     # with its own modulus before filtering groups)
     out = df if "bucket" in df.columns else with_bucket(df, n_buckets)
-    if repartition:
-        out = out.repartition(n_buckets, "bucket")
     # one projection: spans replaced in place, the rest appended
     return out.withColumns(result_columns(make_extract_and_score_udf(cfg)("spans"), cfg))

@@ -74,8 +74,6 @@ def get_spark(
     submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
     submitted_master = None
     if master is None:
-        master = os.environ.get("SPARK_GRAFT_MASTER")
-    if master is None:
         # Respect spark-submit's --master — it reaches the script as the
         # MASTER env var (gateway mode) or via PYSPARK_SUBMIT_ARGS; setting
         # builder.master here would silently turn
@@ -108,13 +106,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get(
-                "SPARK_GRAFT_ARROW_BATCH",
-                str(
-                    ARROW_MAX_RECORDS_PER_BATCH_MANY_LANES
-                    if n_threads > TASK_CPUS_THRESHOLD
-                    else ARROW_MAX_RECORDS_PER_BATCH
-                ),
+            str(
+                ARROW_MAX_RECORDS_PER_BATCH_MANY_LANES
+                if n_threads > TASK_CPUS_THRESHOLD
+                else ARROW_MAX_RECORDS_PER_BATCH
             ),
         )
         .config("spark.ui.enabled", "false")
@@ -127,10 +122,7 @@ def get_spark(
         b = b.config("spark.python.daemon.module", DAEMON_MODULE).config(
             "spark.executorEnv.PYTHONPATH", PACKAGE_ROOT
         )
-    task_cpus = os.environ.get("SPARK_GRAFT_TASK_CPUS")
-    if task_cpus:
-        b = b.config("spark.task.cpus", task_cpus)
-    elif n_threads > TASK_CPUS_THRESHOLD:
+    if n_threads > TASK_CPUS_THRESHOLD:
         b = b.config("spark.task.cpus", "2")
     # SPARK_GRAFT_EXTRA: semicolon-separated key=value conf overrides, so a
     # bench harness or the driver can inject conf without code changes,

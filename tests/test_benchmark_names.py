@@ -49,3 +49,29 @@ def test_every_operator_name_the_workloads_use_exists(workloads):
         (mod, attr) for mod, attr in used if not hasattr(modules[mod], attr)
     )
     assert not missing
+
+
+def test_fused_batch_generates_through_corpus_gen_doc(workloads, monkeypatch):
+    """The traced run times generation by wrapping ``corpus.gen_doc``: the
+    fused batch must look it up at call time and call it once per id."""
+    import pyarrow as pa
+
+    from ai_textbook_processor_spark import corpus
+    from ai_textbook_processor_spark.functions.readability import CriteriaConfig
+    from ai_textbook_processor_spark.operators import extract
+
+    real = corpus.gen_doc
+    calls = []
+
+    def counting_gen_doc(idx, *args, **kwargs):
+        calls.append(idx)
+        return real(idx, *args, **kwargs)
+
+    monkeypatch.setattr(corpus, "gen_doc", counting_gen_doc)
+    fn = extract.make_generate_extract_score_batch_fn(
+        CriteriaConfig(), 3, 5, workloads._fused_out_fields(), procs=1
+    )
+    ids = list(range(7, 19))
+    out = list(fn(iter([pa.RecordBatch.from_arrays([pa.array(ids, pa.int64())], ["id"])])))
+    assert calls == ids
+    assert sum(b.num_rows for b in out) == len(ids)

@@ -64,15 +64,12 @@ def test_fused_falls_back_without_gen_spec(spark):
     # does not survive transformations) must take the column-UDF path
     docs = corpus_df(spark, 4, seed=3).where("doc_id is not null")
     plan = _plan(extract_documents(docs))
-    assert "ArrowEvalPython" in plan and plan.count("MapInPandas") == 1
+    assert "ArrowEvalPython" in plan and plan.count("MapInArrow") == 1
 
 
-def test_fused_falls_back_on_repartition_or_bucket(spark):
+def test_fused_falls_back_on_bucket(spark):
     from ai_textbook_processor_spark.plans.pipeline import with_bucket
 
-    docs = corpus_df(spark, 4, seed=3)
-    plan = _plan(extract_documents(docs, repartition=True))
-    assert "ArrowEvalPython" in plan
     pre_bucketed = with_bucket(corpus_df(spark, 4, seed=3), 8)
     plan = _plan(extract_documents(pre_bucketed))
     assert "ArrowEvalPython" in plan

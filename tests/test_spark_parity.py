@@ -93,7 +93,7 @@ def test_result_independent_of_partitioning(spark):
     df8 = corpus_df(spark, 24, seed=42, num_partitions=8)
     a = {
         r["doc_id"]: invariant([s.asDict() for s in r["spans"]])
-        for r in extract_documents(df1, repartition=False).select("doc_id", "spans").collect()
+        for r in extract_documents(df1).select("doc_id", "spans").collect()
     }
     b = {
         r["doc_id"]: invariant([s.asDict() for s in r["spans"]])

@@ -100,7 +100,7 @@ def main() -> int:
     for c in (2, 8, 32):
         uniform_levels[c] = best_of(
             reps, cores=c, jvms=1, input_path=CORPUS,
-            env_overrides={"SPARK_GRAFT_TASK_CPUS": "2"},
+            env_overrides={"SPARK_GRAFT_EXTRA": "spark.task.cpus=2"},
         )
         print(f"uniform_tc2[local[{c}]]:", json.dumps(uniform_levels[c]), flush=True)
 
