@@ -69,7 +69,6 @@ def _utc(spark: SparkSession) -> None:
 
 
 import contextlib
-import os as _os
 
 
 @contextlib.contextmanager
@@ -82,11 +81,10 @@ def _stream_state_partitions(spark: SparkSession, n: int = 8):
     rows. State partitions should be dimensioned to STATE SIZE, not core
     count — these fixtures' keyspace is O(hundreds) at every SF, so 8
     bounds the bookkeeping while leaving headroom (measured 17.0 -> 7.2 s
-    on ev_stream_late, 15.5 -> 8.4 s on tp3_stream_ingest at sf0.1; at
-    real scale raise SPARK_GRAFT_STREAM_PARTITIONS with the keyspace).
-    The partition count is captured by the query AT START and restored
-    for everything batch afterwards."""
-    n = int(_os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", str(n)))
+    on ev_stream_late, 15.5 -> 8.4 s on tp3_stream_ingest at sf0.1). The
+    count is a constant; a keyspace that grows with the input needs it
+    derived from that keyspace instead. The partition count is captured
+    by the query AT START and restored for everything batch afterwards."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -4707,9 +4705,10 @@ def tp3_stream_ingest(spark, sf_dir):
     import tempfile
 
     from .functions.readability import CriteriaConfig
-    from .functions.text import lang_guess, quality_score
-    from .operators.extract import extracted_text
-    from .plans.training_pipeline import _stages_from_extracted
+    from .plans.training_pipeline import (
+        _checkpoint_text_features,
+        _stages_from_extracted,
+    )
     from .sources.io_catalog import Catalog
     from .streaming.clean_ingest import start_clean_ingest
 
@@ -4745,15 +4744,9 @@ def tp3_stream_ingest(spark, sf_dir):
             q.stop()
 
     tbl = Catalog(os.path.join(base, "catalog")).table("extracted").read(spark)
-    extracted = (
-        tbl.withColumn("text", extracted_text("spans"))
-        .withColumn("quality", quality_score("text"))
-        .withColumn("lang_guess", lang_guess("text"))
-        .localCheckpoint(eager=False)
+    _cleaned, funnel = _stages_from_extracted(
+        *_checkpoint_text_features(tbl), min_quality=0.1
     )
-    ingested = extracted.count()
-    _cleaned, funnel = _stages_from_extracted(extracted, ingested,
-                                              min_quality=0.1)
     head = spark.createDataFrame(
         [("stream_arrivals", n_docs + n_re)], "stage string, n long"
     )

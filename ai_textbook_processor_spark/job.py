@@ -8,8 +8,10 @@ Usage (the north rule's launch shape):
 
 Reads either a generated deterministic corpus (--n-docs) or an existing
 interleaved-documents table (--input parquet path), runs the extraction
-plan, writes the extracted table + quarantine + lineage, prints a one-line
-JSON summary to stdout.
+plan (or, with --resumable and/or --clean-corpus, the durable or
+training-data mode), writes its tables and prints a one-line JSON summary
+to stdout. A flag outside the mode that reads it exits 2 with an argparse
+error before a Spark session starts (``FLAG_RULES``).
 """
 
 from __future__ import annotations
@@ -26,8 +28,45 @@ from ai_textbook_processor_spark.functions.readability import CriteriaConfig
 from ai_textbook_processor_spark.plans.pipeline import extract_documents
 from ai_textbook_processor_spark.session import get_spark
 
+NEEDS, EXCLUDES = "needs", "cannot be combined with"
+_PLAIN_ONLY = ("--salted", "--span-threshold", "--sink noop")
+_CLEAN_ONLY = (
+    "--min-quality", "--benchmark", "--mix-rates", "--domain-cap",
+    "--dsir-target", "--dsir-top-k", "--split", "--export-shards",
+)
 
-def main(argv: list[str] | None = None) -> int:
+#: (flag, NEEDS or EXCLUDES, other flag[, unless flag]): every flag that
+#: some mode does not read, and the flag that selects (or rules out) the
+#: mode that does. The plain-extraction rules come first, so a plain-only
+#: flag given with a mode names that mode.
+FLAG_RULES = (
+    *((f, EXCLUDES, m) for f in _PLAIN_ONLY for m in ("--resumable", "--clean-corpus")),
+    ("--span-threshold", NEEDS, "--salted"),
+    *((f, NEEDS, "--n-docs") for f in ("--seed", "--mega-every", "--doc-offset")),
+    ("--buckets-per-commit", NEEDS, "--resumable"),
+    *((f, NEEDS, "--clean-corpus") for f in _CLEAN_ONLY),
+    ("--mix-default", NEEDS, "--mix-rates"),
+    # _stages_from_extracted runs the DSIR stage only when both are set
+    ("--dsir-target", NEEDS, "--dsir-top-k"),
+    ("--dsir-top-k", NEEDS, "--dsir-target"),
+    # in-session clean_corpus extracts with the default bucket count
+    ("--buckets", EXCLUDES, "--clean-corpus", "--resumable"),
+)
+
+
+def _named_fractions(spec: str) -> tuple[tuple[str, float], ...]:
+    """'train=0.9,val=0.1' -> (('train', 0.9), ('val', 0.1))."""
+    try:
+        return tuple(
+            (k, float(v)) for k, v in (kv.split("=") for kv in spec.split(","))
+        )
+    except ValueError:
+        raise argparse.ArgumentTypeError(
+            f"expected comma-separated name=number pairs, got {spec!r}"
+        ) from None
+
+
+def _parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(description="PySpark main-content extraction job")
     src = ap.add_mutually_exclusive_group(required=True)
     src.add_argument("--n-docs", type=int, help="generate a deterministic corpus")
@@ -76,6 +115,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--mix-rates",
+        type=lambda spec: dict(_named_fractions(spec)),
         help="clean-corpus: per-language keep rates as 'en=0.5,zh=1.0' "
         "(deterministic hash-stratified mixing stage; unlisted languages "
         "use --mix-default)",
@@ -88,6 +128,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--dsir-target",
+        type=lambda spec: tuple(spec.split(",")),
         default=None,
         help="clean-corpus: comma-separated content_type values forming "
         "the DSIR target sample; target docs pass through, the rest of "
@@ -96,10 +137,14 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--dsir-top-k", type=int, default=None)
     ap.add_argument(
         "--split",
+        type=_named_fractions,
         default=None,
         help="clean-corpus: deterministic train/val/test fractions as "
         "'train=0.9,val=0.05,test=0.05' (hash of doc_id; leakage-safe "
-        "because the dedup stages upstream already removed near-dups)",
+        "because the dedup stages upstream already removed near-dups). "
+        "Alone it writes OUT/cleaned/split=<name> parquet; under "
+        "--resumable, or with --export-shards, it exports each split as "
+        "shards under OUT/shards/<name> (16 by default under --resumable)",
     )
     ap.add_argument(
         "--export-shards",
@@ -127,23 +172,164 @@ def main(argv: list[str] | None = None) -> int:
         "docs larger than the median input partition's span total, and "
         "plans the plain one-stage path when there is none)",
     )
-    args = ap.parse_args(argv)
-    # the resumable and clean-corpus branches return before these flags are
-    # read: reject them there instead of ignoring them
-    plain_only = [
-        flag
-        for flag, given in (
-            ("--salted", args.salted),
-            ("--span-threshold", args.span_threshold is not None),
-            ("--sink noop", args.sink == "noop"),
+    return ap
+
+
+def _check_flags(ap: argparse.ArgumentParser, args: argparse.Namespace) -> None:
+    """``ap.error`` (exit 2) on the first ``FLAG_RULES`` violation. A flag
+    counts as given when its value differs from its default ('--sink noop'
+    names the flag by its first word)."""
+
+    def given(flag: str) -> bool:
+        dest = flag.split()[0][2:].replace("-", "_")
+        return getattr(args, dest) != ap.get_default(dest)
+
+    for flag, verb, other, *unless in FLAG_RULES:
+        if given(flag) and given(other) != (verb == NEEDS) and not any(map(given, unless)):
+            ap.error(f"{flag} {verb} {other}" + "".join(f" without {u}" for u in unless))
+
+
+def _per_sec(n: int, wall: float) -> float | None:
+    return round(n / wall, 3) if wall > 0 else None
+
+
+def _clean_corpus(spark, docs, cfg, args, t0: float) -> dict:
+    """--clean-corpus: the durable staged pipeline under --resumable, else
+    the in-session one; both take the same stage options."""
+    from ai_textbook_processor_spark.plans.training_pipeline import (
+        clean_corpus,
+        run_clean_corpus,
+    )
+
+    stage_kw = dict(
+        min_quality=args.min_quality,
+        benchmark=spark.read.parquet(args.benchmark) if args.benchmark else None,
+        mix_rates=args.mix_rates,
+        mix_default_rate=args.mix_default,
+        domain_cap=args.domain_cap,
+        dsir_target_types=args.dsir_target or (),
+        dsir_top_k=args.dsir_top_k,
+    )
+    if args.resumable:
+        summary = run_clean_corpus(
+            spark, docs, args.out, args.resumable, cfg=cfg,
+            n_buckets=args.buckets, buckets_per_commit=args.buckets_per_commit,
+            split_fractions=args.split, export_shards_n=args.export_shards,
+            **stage_kw,
         )
-        if given
-    ]
-    mode = "--resumable" if args.resumable else "--clean-corpus" if args.clean_corpus else None
-    if mode and plain_only:
-        ap.error(f"{plain_only[0]} cannot be combined with {mode}")
-    if args.span_threshold is not None and not args.salted:
-        ap.error("--span-threshold needs --salted")
+        summary["mode"] = "clean_corpus_resumable"
+        summary["wall_sec"] = round(time.monotonic() - t0, 3)
+        return summary
+
+    cleaned, funnel = clean_corpus(docs, cfg, **stage_kw)
+    cleaned = cleaned.drop("text")
+    splits = None
+    if args.split or args.export_shards:
+        from ai_textbook_processor_spark.operators.sampling import hash_split
+
+        fr = args.split or (("train", 1.0),)
+        final = cleaned.select("*", hash_split("doc_id", fr))
+        if args.export_shards:
+            from ai_textbook_processor_spark.operators.export import export_shards
+
+            splits = {}
+            for name, _frac in fr:
+                man = export_shards(
+                    final.where(F.col("split") == name).drop("split"),
+                    f"{args.out}/shards/{name}",
+                    n_shards=args.export_shards,
+                )
+                splits[name] = {
+                    "n_docs": sum(m["n_docs"] for m in man),
+                    "n_shards": len(man),
+                    "n_files": sum(m["n_files"] for m in man),
+                }
+        else:
+            final.write.mode("overwrite").partitionBy("split").parquet(
+                f"{args.out}/cleaned"
+            )
+            splits = {
+                r["split"]: {"n_docs": int(r["n"])}
+                for r in final.groupBy("split").agg(F.count("*").alias("n")).collect()
+            }
+    else:
+        cleaned.write.mode("overwrite").parquet(f"{args.out}/cleaned")
+    wall = time.monotonic() - t0
+    stages = {r["stage"]: int(r["n"]) for r in funnel.collect()}
+    summary = {
+        "mode": "clean_corpus",
+        "funnel": stages,
+        "docs_total": stages["input"],
+        # the funnel's last row is its last active stage
+        "docs_kept": list(stages.values())[-1],
+        "wall_sec": round(wall, 3),
+        "docs_per_sec": _per_sec(stages["input"], wall),
+    }
+    if splits is not None:
+        summary["splits"] = splits
+    return summary
+
+
+def _extract(spark, docs, cfg, args, t0: float) -> dict:
+    """Plain extraction (optionally salted) to OUT/extracted, or to the
+    noop sink."""
+    if args.salted:
+        from ai_textbook_processor_spark.operators.skew import (
+            extract_documents_salted,
+        )
+
+        kw = {}
+        if args.span_threshold is not None:
+            kw["span_threshold"] = (
+                "auto" if args.span_threshold == "auto" else int(args.span_threshold)
+            )
+        out = extract_documents_salted(docs, cfg, n_buckets=args.buckets, **kw)
+    else:
+        out = extract_documents(docs, cfg, n_buckets=args.buckets)
+
+    if args.sink == "noop":
+        out.write.format("noop").mode("overwrite").save()
+        wall = time.monotonic() - t0
+        n_valid = n_quar = n_spans = 0
+        n_total = docs.count()
+    else:
+        # ONE pass over the data: the valid/quarantine split (P8) becomes a
+        # partition column, so the expensive extraction UDF runs exactly once
+        # and readers get partition pruning on is_valid for free.
+        out.write.mode("overwrite").partitionBy("is_valid").parquet(
+            f"{args.out}/extracted"
+        )
+        wall = time.monotonic() - t0  # the data pass: gen/read -> extract -> write
+
+        # Post-write verification (reference's read-back check,
+        # chroma_utility.py:28-32) — deliberately outside the timed window:
+        # the metric is documents/sec extracting, not counting.
+        ext = spark.read.parquet(f"{args.out}/extracted")
+        # partition columns read back as strings; normalize
+        ext = ext.withColumn("is_valid", F.col("is_valid").cast("boolean"))
+        counts = (
+            ext.groupBy("is_valid")
+            .agg(F.count("*").alias("n"), F.sum("n_spans").alias("spans"))
+            .collect()
+        )
+        n_valid = sum(r["n"] for r in counts if r["is_valid"])
+        n_quar = sum(r["n"] for r in counts if not r["is_valid"])
+        n_spans = sum(r["spans"] or 0 for r in counts if r["is_valid"])
+        n_total = n_valid + n_quar
+    return {
+        "docs_valid": n_valid,
+        "docs_quarantined": n_quar,
+        "docs_total": n_total,
+        "output_spans": int(n_spans),
+        "wall_sec": round(wall, 3),
+        "docs_per_sec": _per_sec(n_total, wall),
+    }
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = _parser()
+    args = ap.parse_args(argv)
+    _check_flags(ap, args)
 
     spark = get_spark(app_name="extract_job", master=args.master)
     if args.warmup:
@@ -160,235 +346,22 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.n_docs, seed=args.seed, mega_every=args.mega_every,
             start=args.doc_offset,
         )
-
     cfg = CriteriaConfig(
         grade_lo=args.grade_lo, grade_hi=args.grade_hi, relaxed_relevance=args.relaxed
     )
 
-    if args.resumable and args.clean_corpus:
-        from ai_textbook_processor_spark.plans.training_pipeline import (
-            run_clean_corpus,
-        )
-
-        benchmark = (
-            spark.read.parquet(args.benchmark) if args.benchmark else None
-        )
-        mix_rates = None
-        if args.mix_rates:
-            mix_rates = {
-                k: float(v)
-                for k, v in (kv.split("=") for kv in args.mix_rates.split(","))
-            }
-        summary = run_clean_corpus(
-            spark,
-            docs,
-            args.out,
-            args.resumable,
-            cfg=cfg,
-            n_buckets=args.buckets,
-            buckets_per_commit=args.buckets_per_commit,
-            min_quality=args.min_quality,
-            benchmark=benchmark,
-            mix_rates=mix_rates,
-            mix_default_rate=args.mix_default,
-            domain_cap=args.domain_cap,
-            dsir_target_types=(
-                tuple(args.dsir_target.split(",")) if args.dsir_target else ()
-            ),
-            dsir_top_k=args.dsir_top_k,
-            split_fractions=(
-                tuple(
-                    (k, float(v))
-                    for k, v in (kv.split("=") for kv in args.split.split(","))
-                )
-                if args.split
-                else None
-            ),
-            export_shards_n=args.export_shards,
-        )
-        summary["mode"] = "clean_corpus_resumable"
-        summary["wall_sec"] = round(time.monotonic() - t0, 3)
-        print(json.dumps(summary))
-        spark.stop()
-        return 0
-
-    if args.resumable:
+    if args.clean_corpus:
+        summary = _clean_corpus(spark, docs, cfg, args, t0)
+    elif args.resumable:
         from ai_textbook_processor_spark.plans.lineage import run_extraction
 
         summary = run_extraction(
-            spark,
-            docs,
-            args.out,
-            args.resumable,
-            n_buckets=args.buckets,
-            buckets_per_commit=args.buckets_per_commit,
-            cfg=cfg,
+            spark, docs, args.out, args.resumable, n_buckets=args.buckets,
+            buckets_per_commit=args.buckets_per_commit, cfg=cfg,
         )
         summary["wall_sec"] = round(time.monotonic() - t0, 3)
-        print(json.dumps(summary))
-        spark.stop()
-        return 0
-
-    if args.clean_corpus:
-        from ai_textbook_processor_spark.plans.training_pipeline import (
-            clean_corpus,
-        )
-
-        benchmark = (
-            spark.read.parquet(args.benchmark) if args.benchmark else None
-        )
-        mix_rates = None
-        if args.mix_rates:
-            mix_rates = {
-                k: float(v)
-                for k, v in (kv.split("=") for kv in args.mix_rates.split(","))
-            }
-        cleaned, funnel = clean_corpus(
-            docs,
-            cfg,
-            min_quality=args.min_quality,
-            benchmark=benchmark,
-            mix_rates=mix_rates,
-            mix_default_rate=args.mix_default,
-            domain_cap=args.domain_cap,
-            dsir_target_types=(
-                tuple(args.dsir_target.split(",")) if args.dsir_target else ()
-            ),
-            dsir_top_k=args.dsir_top_k,
-        )
-        splits_summary = None
-        if args.split or args.export_shards:
-            from ai_textbook_processor_spark.operators.sampling import (
-                hash_split,
-            )
-
-            fr = (
-                tuple(
-                    (k, float(v))
-                    for k, v in (kv.split("=") for kv in args.split.split(","))
-                )
-                if args.split
-                else (("train", 1.0),)
-            )
-            final = cleaned.drop("text").select("*", hash_split("doc_id", fr))
-            splits_summary = {}
-            if args.export_shards:
-                from ai_textbook_processor_spark.operators.export import (
-                    export_shards,
-                )
-
-                for name, _frac in fr:
-                    man = export_shards(
-                        final.where(F.col("split") == name).drop("split"),
-                        f"{args.out}/shards/{name}",
-                        n_shards=args.export_shards,
-                    )
-                    splits_summary[name] = {
-                        "n_docs": sum(m["n_docs"] for m in man),
-                        "n_shards": len(man),
-                        "n_files": sum(m["n_files"] for m in man),
-                    }
-            else:
-                final.write.mode("overwrite").partitionBy("split").parquet(
-                    f"{args.out}/cleaned"
-                )
-                splits_summary = {
-                    r["split"]: {"n_docs": int(r["n"])}
-                    for r in final.groupBy("split")
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
-        else:
-            cleaned.drop("text").write.mode("overwrite").parquet(
-                f"{args.out}/cleaned"
-            )
-        wall = time.monotonic() - t0
-        stages = {r["stage"]: int(r["n"]) for r in funnel.collect()}
-        final_stage = (
-            "after_mix"
-            if mix_rates is not None
-            else "after_dsir"
-            if (args.dsir_target and args.dsir_top_k)
-            else "after_domain_cap"
-            if args.domain_cap is not None
-            else "after_decontam"
-            if benchmark is not None
-            else "after_near_dedup"
-        )
-        payload = {
-            "mode": "clean_corpus",
-            "funnel": stages,
-            "docs_total": stages.get("input", 0),
-            "docs_kept": stages.get(final_stage, 0),
-            "wall_sec": round(wall, 3),
-            "docs_per_sec": (
-                round(stages.get("input", 0) / wall, 3) if wall > 0 else None
-            ),
-        }
-        if splits_summary is not None:
-            payload["splits"] = splits_summary
-        print(json.dumps(payload))
-        spark.stop()
-        return 0
-
-    if args.salted:
-        from ai_textbook_processor_spark.operators.skew import (
-            extract_documents_salted,
-        )
-
-        kw = {}
-        if args.span_threshold is not None:
-            kw["span_threshold"] = (
-                "auto"
-                if args.span_threshold == "auto"
-                else int(args.span_threshold)
-            )
-        out = extract_documents_salted(docs, cfg, n_buckets=args.buckets, **kw)
     else:
-        out = extract_documents(docs, cfg, n_buckets=args.buckets)
-
-    if args.sink == "noop":
-        out.write.format("noop").mode("overwrite").save()
-        wall = time.monotonic() - t0
-        n = docs.count()
-        print(json.dumps({
-            "docs_valid": 0, "docs_quarantined": 0, "docs_total": n,
-            "output_spans": 0, "wall_sec": round(wall, 3),
-            "docs_per_sec": round(n / wall, 3) if wall > 0 else None,
-        }))
-        spark.stop()
-        return 0
-
-    # ONE pass over the data: the valid/quarantine split (P8) becomes a
-    # partition column, so the expensive extraction UDF runs exactly once
-    # and readers get partition pruning on is_valid for free.
-    out.write.mode("overwrite").partitionBy("is_valid").parquet(
-        f"{args.out}/extracted"
-    )
-    wall = time.monotonic() - t0  # the data pass: gen/read -> extract -> write
-
-    # Post-write verification (reference's read-back check,
-    # chroma_utility.py:28-32) — deliberately outside the timed window:
-    # the metric is documents/sec extracting, not counting.
-    ext = spark.read.parquet(f"{args.out}/extracted")
-    # partition columns read back as strings; normalize
-    ext = ext.withColumn("is_valid", F.col("is_valid").cast("boolean"))
-    counts = (
-        ext.groupBy("is_valid")
-        .agg(F.count("*").alias("n"), F.sum("n_spans").alias("spans"))
-        .collect()
-    )
-    n_valid = sum(r["n"] for r in counts if r["is_valid"])
-    n_quar = sum(r["n"] for r in counts if not r["is_valid"])
-    n_spans = sum(r["spans"] or 0 for r in counts if r["is_valid"])
-    summary = {
-        "docs_valid": n_valid,
-        "docs_quarantined": n_quar,
-        "docs_total": n_valid + n_quar,
-        "output_spans": int(n_spans),
-        "wall_sec": round(wall, 3),
-        "docs_per_sec": round((n_valid + n_quar) / wall, 3) if wall > 0 else None,
-    }
+        summary = _extract(spark, docs, cfg, args, t0)
     print(json.dumps(summary))
     spark.stop()
     return 0

@@ -51,26 +51,11 @@ from .pipeline import extract_documents
 
 
 def clean_corpus(
-    docs: DataFrame,
-    cfg: CriteriaConfig | None = None,
-    min_quality: float = 0.3,
-    langs: tuple[str, ...] = (),
-    near_dup_min_matches: int = 12,
-    coefs=tuple(MH_COEFS_16),
-    band_rows: int = 4,
-    hot_bucket_cap: int | None = 1000,
-    shingle_n: int = 3,
-    benchmark: DataFrame | None = None,
-    decontam_min_shared: int = 2,
-    decontam_shingle_n: int = 3,
-    mix_rates: dict[str, float] | None = None,
-    mix_default_rate: float = 1.0,
-    domain_cap: int | None = None,
-    domain_col: str = "content_type",
-    dsir_target_types: tuple[str, ...] = (),
-    dsir_top_k: int | None = None,
+    docs: DataFrame, cfg: CriteriaConfig | None = None, **stage_kw
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (cleaned DataFrame, funnel DataFrame of per-stage counts).
+    ``stage_kw`` forwards to :func:`_stages_from_extracted`, which declares
+    the stage options and their defaults.
 
     Optional r3 stages, each off by default (funnel rows appear only when
     active, so existing oracles are untouched):
@@ -108,26 +93,24 @@ def clean_corpus(
     doc_ids, far beyond broadcast limits. A shuffle anti-join on a slim key
     column is cheap, and AQE still broadcasts when the set actually fits.
     """
-    extracted = (
-        extract_documents(docs, cfg)
-        .withColumn("text", extracted_text("spans"))
+    return _stages_from_extracted(
+        *_checkpoint_text_features(extract_documents(docs, cfg)), **stage_kw
+    )
+
+
+def _checkpoint_text_features(extracted: DataFrame) -> tuple[DataFrame, int]:
+    """Add ``text``, ``quality`` and ``lang_guess`` to an extracted frame
+    behind a lazy ``localCheckpoint``, and count it: the count is the
+    action that materializes the checkpoint (so extraction runs there,
+    once). Returns (checkpointed frame, row count), the input of
+    :func:`_stages_from_extracted`."""
+    featured = (
+        extracted.withColumn("text", extracted_text("spans"))
         .withColumn("quality", quality_score("text"))
         .withColumn("lang_guess", lang_guess("text"))
         .localCheckpoint(eager=False)
     )
-    n_input = extracted.count()  # action 1: materializes the checkpoint => extraction runs here, once
-    return _stages_from_extracted(
-        extracted, n_input,
-        min_quality=min_quality, langs=langs,
-        near_dup_min_matches=near_dup_min_matches, coefs=coefs,
-        band_rows=band_rows, hot_bucket_cap=hot_bucket_cap,
-        shingle_n=shingle_n, benchmark=benchmark,
-        decontam_min_shared=decontam_min_shared,
-        decontam_shingle_n=decontam_shingle_n,
-        mix_rates=mix_rates, mix_default_rate=mix_default_rate,
-        domain_cap=domain_cap, domain_col=domain_col,
-        dsir_target_types=dsir_target_types, dsir_top_k=dsir_top_k,
-    )
+    return featured, featured.count()
 
 
 def _stages_from_extracted(
@@ -331,6 +314,7 @@ def _stages_from_extracted(
         F.sum(is_selected.cast("long")).alias("after_dsir"),
         F.sum((is_selected & sampled).cast("long")).alias("after_mix"),
     ).collect()[0]
+    # rows in stage order: the last row counts the docs ``cleaned`` keeps
     counts = {
         "input": n_input,
         "extracted_valid": agg["extracted_valid"],
@@ -396,15 +380,10 @@ def run_clean_corpus(
         cfg=cfg, fail_after_commits=fail_after_commits,
     )
     catalog = Catalog(out_root)
-    staged = catalog.table("extracted").read(spark)
-    extracted = (
-        staged.withColumn("text", extracted_text("spans"))
-        .withColumn("quality", quality_score("text"))
-        .withColumn("lang_guess", lang_guess("text"))
-        .localCheckpoint(eager=False)
+    cleaned, funnel = _stages_from_extracted(
+        *_checkpoint_text_features(catalog.table("extracted").read(spark)),
+        **stage_kw,
     )
-    n_input = extracted.count()
-    cleaned, funnel = _stages_from_extracted(extracted, n_input, **stage_kw)
 
     catalog.table("cleaned").append(
         cleaned.drop("text"), commit_id=f"{run_id}-cleaned"

@@ -32,9 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.readability import CriteriaConfig
-from ..plans.pipeline import extract_documents
-from ..schemas import DOCUMENTS_SCHEMA
-from ..sources.io_catalog import Catalog
+from .stream_extract import document_stream, start_epoch_commits
 
 #: fixed epoch base for the synthesized event-time column — documents have
 #: no wall-clock; ingest identity only needs a DETERMINISTIC event time so
@@ -70,13 +68,8 @@ def start_clean_ingest(
     dedup state and source progress restore from the checkpoint, and the
     catalog's idempotent epoch commits make replayed batches no-ops.
     """
-    catalog = Catalog(out_root)
-    extracted_tbl = catalog.table("extracted")
-
     stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(input_dir)
+        document_stream(spark, input_dir, max_files_per_trigger)
         # delivery fingerprint = (doc_id, content): a re-SENT doc absorbs,
         # but two DIFFERENT docs with byte-identical content both pass —
         # content-level dedup is the batch exact-dedup stage's job (it
@@ -90,14 +83,5 @@ def start_clean_ingest(
         .withWatermark("_ts", watermark)
         .dropDuplicatesWithinWatermark(["_fp"])
     )
-
-    def commit_batch(batch_df, epoch_id: int) -> None:
-        out = extract_documents(batch_df.drop("_fp", "_ts"), cfg)
-        extracted_tbl.append(out, commit_id=f"epoch-{epoch_id:08d}")
-
-    return (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    # the epoch commit projects each batch back to the document columns
+    return start_epoch_commits(stream, out_root, checkpoint_dir, cfg)

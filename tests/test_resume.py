@@ -304,3 +304,45 @@ def test_time_travel_and_compaction(spark, tmp_path):
 
     with pytest.raises(ValueError):
         tbl.read(spark, as_of="nope")
+
+
+def test_staged_clean_corpus_forwards_optional_stages(spark, tmp_path):
+    """run_clean_corpus forwards every stage option through ``**stage_kw``:
+    with domain cap, DSIR selection and mixing on, the durable pipeline
+    gives the in-session clean_corpus funnel (each optional stage row
+    included) and the same cleaned doc ids."""
+    from ai_textbook_processor_spark.functions.readability import CriteriaConfig
+    from ai_textbook_processor_spark.plans.training_pipeline import (
+        clean_corpus,
+        run_clean_corpus,
+    )
+
+    docs = corpus_df(spark, N_DOCS, seed=42)
+    fams = sorted(r[0] for r in docs.select("content_type").distinct().collect())
+    stage_kw = dict(
+        min_quality=0.0,
+        domain_cap=6,
+        dsir_target_types=tuple(f for f in fams if f.startswith("pdf")),
+        dsir_top_k=5,
+        mix_rates={"en": 0.5},
+        mix_default_rate=0.75,
+    )
+    cfg = CriteriaConfig(grade_lo=-100.0, grade_hi=100.0)
+
+    summary = run_clean_corpus(
+        spark, docs, str(tmp_path / "staged"), "run-opt", cfg=cfg,
+        n_buckets=N_BUCKETS, buckets_per_commit=PER_COMMIT, **stage_kw,
+    )
+    ref_cleaned, ref_funnel = clean_corpus(docs, cfg, **stage_kw)
+    ref = {r["stage"]: int(r["n"]) for r in ref_funnel.collect()}
+
+    assert list(ref)[-3:] == ["after_domain_cap", "after_dsir", "after_mix"]
+    # every optional stage drops docs, so a dropped option would show
+    assert ref["after_near_dedup"] > ref["after_domain_cap"] > ref["after_dsir"] > ref["after_mix"]
+    assert summary["funnel"] == ref
+    staged_ids = sorted(
+        r[0] for r in Catalog(str(tmp_path / "staged")).table("cleaned").read(spark)
+        .select("doc_id").collect()
+    )
+    assert staged_ids == sorted(r[0] for r in ref_cleaned.select("doc_id").collect())
+    assert len(staged_ids) == ref["after_mix"]
