@@ -23,6 +23,8 @@ every corpus family (tests/test_columnar.py).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -281,21 +283,358 @@ def _passthrough(s: _Spans, rows: np.ndarray, units: _Rows) -> None:
     )
 
 
-def _e1(s: _Spans, rows: np.ndarray, units: _Rows) -> None:
-    """E1 once per HTML fragment; its spans form one unit at the fragment."""
-    unit, sub, kind, texts = [], [], [], []
-    code = {k: i for i, k in enumerate(OUT_KINDS)}
-    for r, fragment in zip(rows, s.text.take(rows).to_pylist()):
-        for j, (k, t) in enumerate(kernels.extract_html_fragment(fragment)):
-            unit.append(r)
-            sub.append(j)
-            kind.append(code[k])
-            texts.append(t)
-    unit = np.array(unit, dtype=np.int64)
-    units.add(
-        s.doc[unit], np.array(kind, dtype=np.int8), pa.array(texts, pa.string()),
-        (s.off[unit], s.pos[unit], np.array(sub, dtype=np.int64)), src=s.off[unit],
+# -- E1 ------------------------------------------------------------------------
+
+# Tag names the batch E1 reads: at most _NAME_MAX characters of the kernel's
+# tokenizer's name class, packed 6 bits a character (case folded) into one
+# int64 key. A longer name sends its fragment to the kernel.
+_NAME_CHARS = "abcdefghijklmnopqrstuvwxyz0123456789:._-"
+_NAME_MAX = 10
+_NAME_CODE = np.zeros(256, dtype=np.int64)
+for _i, _c in enumerate(_NAME_CHARS):
+    _NAME_CODE[ord(_c)] = _NAME_CODE[ord(_c.upper())] = _i + 1
+_LETTER = np.zeros(256, dtype=bool)
+_LETTER[[ord(c) for c in _NAME_CHARS[:26] + _NAME_CHARS[:26].upper()]] = True
+_SPACE = np.zeros(256, dtype=bool)
+_SPACE[[ord(c) for c in "\t\n\r\f "]] = True
+
+
+def _name_key(name: str) -> int:
+    return sum(int(_NAME_CODE[ord(c)]) << (6 * i) for i, c in enumerate(name))
+
+
+# The names the tree rules test, in key order.
+_KNOWN = sorted(
+    set(kernels._BLOCK_TAGS) | set(kernels._BOILERPLATE_TAGS) | set(kernels._VOID_TAGS)
+    | set(kernels._P_CLOSERS) | set(kernels._RAWTEXT_TAGS) | {"a", "tr"},
+    key=_name_key,
+)
+_KNOWN_KEYS = np.array([_name_key(x) for x in _KNOWN], dtype=np.int64)
+# A tag with more than a name between '<' and '>' must match this whole: an
+# end tag has only whitespace after its name, a start tag has attributes in
+# the kernel's strict grammar, which proves that the kernel's tokenizer ends
+# the tag at the same '>' and reads no quote differently.
+_TAG_NAME = r"[a-zA-Z][a-zA-Z0-9:._-]*"
+_TAG_PATTERN = (
+    rf"^<(?:/{_TAG_NAME}{kernels._WSC}*|{_TAG_NAME}(?:{kernels._ATTR1})*{kernels._WSC}*)>$"
+)
+# The character references it decodes, each to the one character
+# html.unescape makes of it. A '&' in text that starts none of them sends its
+# fragment to the kernel. '&amp;' goes last, so no '&' it yields is re-read.
+_ENTITIES = (
+    ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"),
+    ("&nbsp;", "\xa0"), ("&amp;", "&"),
+)
+# (open element, tag opened inside it) pairs where the kernel's tree builder
+# closes the element first (_DomBuilder._implied_end): such fragments go to
+# the kernel.
+_IMPLIED_ENDS = (
+    (("p",), kernels._P_CLOSERS),
+    (("li",), ("li",)),
+    (("td", "th"), ("td", "th", "tr")),
+    (("tr",), ("tr",)),
+)
+
+
+def _gather(u8: np.ndarray, starts: np.ndarray, lengths: np.ndarray):
+    """The byte ranges ``[starts, starts + lengths)`` of ``u8`` laid end to
+    end, and their offsets in the result."""
+    offsets = np.zeros(len(starts) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    index = np.arange(offsets[-1]) + np.repeat(starts - offsets[:-1], lengths)
+    return u8[index], offsets
+
+
+@functools.lru_cache(maxsize=None)
+def _name_flags(members) -> np.ndarray:
+    """Per name index: whether the name is in ``members``; False for other
+    names and for the fragment root (two entries at the end)."""
+    flags = np.array([x in members for x in _KNOWN] + [False, False], dtype=bool)
+    flags.flags.writeable = False  # shared by every caller
+    return flags
+
+
+class _Tags:
+    """Every '<' of a batch of HTML fragments read as a tag: its fragment,
+    byte ``start`` and ``end``, end tag or not, name ``key`` and ``name``
+    (index into ``_KNOWN``, ``len(_KNOWN)`` for any other name). A fragment
+    holding a '<' that is not such a tag, a raw-text element or a start tag
+    ending in '/' is marked in ``bad``."""
+
+    def __init__(self, offs: np.ndarray, u8: np.ndarray, bad: np.ndarray):
+        n_bytes = len(u8)
+        lt = np.flatnonzero(u8 == 0x3C)
+        frag = np.searchsorted(offs, lt, side="right") - 1
+        gt = np.flatnonzero(u8 == 0x3E)
+        end = np.append(gt, n_bytes)[np.searchsorted(gt, lt)] + 1  # past the first '>'
+        ok = end <= np.minimum(np.append(lt[1:], n_bytes), offs[frag + 1])
+        byte = np.concatenate([u8, np.zeros(_NAME_MAX + 3, dtype=np.uint8)])
+
+        close = byte[lt + 1] == 0x2F
+        at = lt + 1 + close
+        ok &= _LETTER[byte[at]]
+        running = ok.copy()
+        key = np.zeros(len(lt), dtype=np.int64)
+        length = np.zeros(len(lt), dtype=np.int64)
+        for i in range(_NAME_MAX + 1):
+            c = _NAME_CODE[byte[at + i]]
+            running &= c > 0
+            if not running.any():
+                break
+            key |= (c * running) << (6 * i)
+            length += running
+        ok &= ~running  # at most _NAME_MAX characters
+        after = byte[at + length]
+        more = ok & (after != 0x3E)
+        ok &= ~more | _SPACE[after]
+        ok &= close | (byte[end - 2] != 0x2F)  # no start tag ending in '/'
+        more = np.flatnonzero(more & ok)
+        if len(more):
+            data, offsets = _gather(u8, lt[more], end[more] - lt[more])
+            tags = pa.StringArray.from_buffers(
+                len(more), pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)
+            )
+            ok[more] = pc.match_substring_regex(tags, _TAG_PATTERN).to_numpy(
+                zero_copy_only=False
+            )
+        bad[frag[~ok]] = True
+        self.frag, self.start, self.end = frag[ok], lt[ok], end[ok]
+        self.close, self.key = close[ok], key[ok]
+        i = np.minimum(np.searchsorted(_KNOWN_KEYS, self.key), len(_KNOWN) - 1)
+        self.name = np.where(_KNOWN_KEYS[i] == self.key, i, len(_KNOWN))
+        bad[self.frag[self.is_(kernels._RAWTEXT_TAGS)]] = True
+
+    def is_(self, members) -> np.ndarray:
+        return _name_flags(members)[self.name]
+
+
+def _check_entities(u8, offs, t: _Tags, bad) -> None:
+    """Mark each fragment with a '&' outside its tags that starts no pinned
+    entity."""
+    amp = np.flatnonzero(u8 == 0x26)
+    if not len(amp):
+        return
+    i = np.searchsorted(t.start, amp, side="right") - 1
+    amp = amp[(i < 0) | (amp >= np.append(t.end, 0)[i])]  # no tag before: end 0
+    frag = np.searchsorted(offs, amp, side="right") - 1
+    matched = np.zeros(len(amp), dtype=bool)
+    for ent, _char in _ENTITIES:
+        e = np.frombuffer(ent.encode(), dtype=np.uint8)
+        hit = amp + len(e) <= offs[frag + 1]
+        for k in range(1, len(e)):
+            hit &= u8[np.minimum(amp + k, len(u8) - 1)] == e[k]
+        matched |= hit
+    bad[frag[~matched]] = True
+
+
+class _Tree:
+    """The element tree of every fragment whose tags nest plainly, with
+    ``bad`` marked for the others. Elements are the start and end tags of
+    non-void names (``tag``: index into the tag table), in document order;
+    ``mate`` pairs each start tag with its end tag, ``parent`` gives each
+    start tag's parent: a start tag, or ``len(tag) + fragment`` for the
+    fragment root."""
+
+    def __init__(self, t: _Tags, bad: np.ndarray, n: int):
+        # the depth after each tag must never drop below 0 and must end at 0
+        ev = np.flatnonzero(~t.is_(kernels._VOID_TAGS) & ~bad[t.frag])
+        step = np.where(t.close[ev], -1, 1)
+        first = _run_starts(t.frag[ev])
+        starts = np.flatnonzero(first)
+        before = np.cumsum(step) - step
+        depth = before + step - before[starts][np.cumsum(first) - 1]
+        bad[t.frag[ev][depth < 0]] = True
+        last = np.append(starts[1:], len(ev))[: len(starts)] - 1
+        bad[t.frag[ev][last][depth[last] != 0]] = True
+        keep = ~bad[t.frag[ev]]
+        ev, depth = ev[keep], depth[keep]
+        opens, frag, name = ~t.close[ev], t.frag[ev], t.name[ev]
+        level = depth + ~opens  # an end tag's level is the depth before it
+        idx = np.arange(len(ev))
+
+        # In (fragment, level, document) order each end tag follows the
+        # start tag it closes, which must carry the same name.
+        order = np.lexsort((idx, level, frag))
+        ends = np.flatnonzero(~opens[order])
+        opener = order[ends - 1]
+        key = t.key[ev]
+        bad[frag[opener][key[opener] != key[order[ends]]]] = True
+        mate = np.zeros(len(ev), dtype=np.int64)
+        mate[opener] = order[ends]
+
+        # The parent is the last start tag one level up: the levels of a
+        # fragment are consecutive groups in that order.
+        group = np.empty(len(ev), dtype=np.int64)
+        group[order] = np.cumsum(_run_starts(frag[order], level[order])) - 1
+        width = len(ev) + 1
+        up = np.searchsorted((group * width + idx)[order], (group - 1) * width + idx) - 1
+        parent = np.where(level > 1, order[np.maximum(up, 0)], len(ev) + frag)
+        parent[~opens] = -1
+        root = len(_KNOWN) + 1
+        p_name = np.append(name, np.full(n, root))[parent]
+        implied = np.zeros(len(ev), dtype=bool)
+        for outer, inner in _IMPLIED_ENDS:
+            implied |= _name_flags(outer)[p_name] & _name_flags(inner)[name]
+        bad[frag[opens & implied]] = True
+
+        self.tag, self.frag, self.name, self.mate, self.parent = ev, frag, name, mate, parent
+        self.opens = opens & ~bad[frag]  # the start tags of fragments read here
+
+
+def _block_texts(t: _Tags, tree: _Tree, b: np.ndarray, u8, offs, bad):
+    """The raw texts and link-character counts of the leaf blocks ``b``
+    (start tags in ``tree``, none under boilerplate). A block's text is the
+    text runs after the tags inside it, outside boilerplate, a space for each
+    <br>; a run is link text inside an <a>."""
+    g = np.flatnonzero(~bad[t.frag])  # every tag of the fragments read here
+    frag = t.frag[g]
+    last = np.append(frag[1:] != frag[:-1], True)
+    run_lo = t.end[g]
+    run_hi = np.where(last, offs[frag + 1], np.append(t.start[g][1:], 0))
+
+    def inside(names):  # per tag: the run after it lies inside such an element
+        f = t.is_(names)[g].astype(np.int64)
+        return np.cumsum(np.where(t.close[g], -f, f)) > 0
+
+    at = np.searchsorted(g, tree.tag[b])
+    step = np.zeros(len(g) + 1, dtype=np.int64)
+    step[at] = 1
+    block = np.cumsum(step[:-1]) - 1
+    step[np.searchsorted(g, tree.tag[tree.mate[b]])] = -1
+    kept = np.flatnonzero((np.cumsum(step[:-1]) > 0) & ~inside(kernels._BOILERPLATE_TAGS))
+    br = (t.is_(("br",)) & ~t.close)[g][kept].astype(np.int64)
+    data, run_offs = _gather(u8, run_lo[kept] - br, run_hi[kept] - run_lo[kept] + br)
+    data[run_offs[:-1][br > 0]] = 0x20
+
+    def strings(offsets):
+        return pa.StringArray.from_buffers(
+            len(offsets) - 1, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)
+        )
+
+    block_runs = np.zeros(len(b) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(block[kept], minlength=len(b)), out=block_runs[1:])
+    runs, texts = strings(run_offs), strings(run_offs[block_runs])
+    if (data == 0x26).any():
+        for ent, char in _ENTITIES:
+            runs = pc.replace_substring(runs, ent, char)
+            texts = pc.replace_substring(texts, ent, char)
+    chars = pc.utf8_length(runs).to_numpy() * inside(("a",))[kept]
+    return texts, np.bincount(block[kept], weights=chars, minlength=len(b))
+
+
+def _html_fast(t: _Tags, tree: _Tree, u8, offs, bad, n: int):
+    """The E1 spans of the fragments ``tree`` reads: (fragment, kind,
+    text) in document order."""
+    n_ev = len(tree.tag)
+    mate = tree.mate
+    block = tree.opens & _name_flags(kernels._BLOCK_TAGS)[tree.name]
+    nested = np.concatenate([[0], np.cumsum(block)])  # block start tags before
+    leaf = block & (nested[mate] == nested[np.arange(n_ev) + 1])
+    # under boilerplate: inside the [start, end) tag span of a boilerplate
+    # element (leaf blocks never are one)
+    bp = np.flatnonzero(tree.opens & _name_flags(kernels._BOILERPLATE_TAGS)[tree.name])
+    covers = np.zeros(n_ev + 1, dtype=np.int64)
+    np.add.at(covers, bp, 1)
+    np.add.at(covers, mate[bp], -1)
+    b = np.flatnonzero(leaf & (np.cumsum(covers[:-1]) == 0))
+    if not len(b):
+        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int8), _empty_strings(0)
+    raw, link_chars = _block_texts(t, tree, b, u8, offs, bad)
+    texts = normalize(raw)
+    length = pc.utf8_length(texts).to_numpy().astype(np.int64)
+    ld = link_chars / np.maximum(length, 1)
+    name = tree.name[b]
+    kind = np.where(
+        _name_flags(kernels._HEADING_TAGS)[name], _HEADING,
+        np.where(_name_flags(("figcaption", "caption"))[name], _CAPTION, _BODY),
+    ).astype(np.int8)
+
+    # Arc90: a body block votes for its parent and half for its grandparent;
+    # the best node has the top score, ties to the earliest (a root first)
+    body = (kind == _BODY) & (length >= kernels.MIN_BODY_CHARS)
+    votes = body & (ld < kernels.MAX_LINK_DENSITY)
+    pts = 1.0 + np.minimum(length[votes] // 100, 3)
+    parent = np.append(tree.parent, np.full(n, -1))
+    p = parent[b[votes]]
+    gp = parent[p]
+    score = np.bincount(p, weights=pts, minlength=n_ev + n)
+    score += np.bincount(gp[gp >= 0], weights=pts[gp >= 0] / 2, minlength=n_ev + n)
+    node_frag = np.append(tree.frag, np.arange(n))
+    voted = np.flatnonzero(score > 0)
+    order = np.where(voted < n_ev, voted, -1)
+    o = voted[np.lexsort((order, -score[voted], node_frag[voted]))]
+    best = o[_run_starts(node_frag[o])]
+    best_lo = np.full(n, n_ev)  # no best node: an empty range
+    best_hi = np.full(n, -1)
+    is_root = best >= n_ev
+    best_lo[node_frag[best]] = np.where(is_root, -1, best)
+    best_hi[node_frag[best]] = np.where(is_root, n_ev, mate[np.minimum(best, n_ev - 1)])
+
+    frag = tree.frag[b]
+    keep = (
+        (best_lo[frag] <= b) & (b <= best_hi[frag])
+        & np.where(kind == _BODY, body, length >= kernels.MIN_HEADING_CHARS)
+        & (ld < np.where(kind == _HEADING, kernels.MAX_HEADING_LINK_DENSITY,
+                         kernels.MAX_LINK_DENSITY))
     )
+    return frag[keep], kind[keep], texts.filter(pa.array(keep))
+
+
+def extract_html_batch(fragments: pa.Array) -> tuple[np.ndarray, np.ndarray, pa.Array]:
+    """E1 over a null-free string array of HTML fragments: ``(fragment,
+    kind, text)``, one entry per span ``kernels.extract_html_fragment``
+    returns, fragment by fragment and in its order within each (``kind`` an
+    ``OUT_KINDS`` code).
+
+    A fragment whose tree the kernel builds by plain nesting is read from
+    the batch's UTF-8 buffer with array operations: a tag table, depth as a
+    cumulative sum, each end tag paired with the last start tag at its
+    depth, leaf blocks and boilerplate ancestors by interval, link
+    characters and block texts from the text runs between tags, Arc90 votes
+    summed per node and the best container per fragment from one sort.
+    Every other fragment goes to ``kernels.extract_html_fragment``: implied
+    ends, mismatched or unclosed tags, raw-text elements, comments and
+    declarations, a '&' outside the pinned entities, and any tag the
+    kernel's tokenizer would read differently or reject."""
+    n = len(fragments)
+    offs, u8 = _string_buffers(fragments)
+    offs = offs.astype(np.int64)
+    bad = np.zeros(n, dtype=bool)
+    t = _Tags(offs, u8, bad)
+    _check_entities(u8, offs, t, bad)
+    tree = _Tree(t, bad, n)
+    frags, kinds, texts = [], [], []
+    if tree.opens.any():
+        for part, got in zip((frags, kinds, texts), _html_fast(t, tree, u8, offs, bad, n)):
+            part.append(got)
+
+    rows = np.flatnonzero(bad)
+    if not len(rows) and frags:
+        return frags[0], kinds[0], texts[0]
+    code = {k: i for i, k in enumerate(OUT_KINDS)}
+    spans = [
+        (r, code[k], text)
+        for r, fragment in zip(rows, fragments.take(rows).to_pylist())
+        for k, text in kernels.extract_html_fragment(fragment)
+    ]
+    frags.append(np.array([r for r, _k, _t in spans], dtype=np.int64))
+    kinds.append(np.array([k for _r, k, _t in spans], dtype=np.int8))
+    texts.append(pa.array([x for _r, _k, x in spans], pa.string()))
+    frag = np.concatenate(frags)
+    o = np.argsort(frag, kind="stable")
+    return frag[o], np.concatenate(kinds)[o], pa.concat_arrays(texts).take(o)
+
+
+def _e1(s: _Spans, rows: np.ndarray, units: _Rows) -> None:
+    """E1 over every HTML fragment ``rows``; each fragment's spans form one
+    unit at the fragment."""
+    frag, kind, text = extract_html_batch(s.text.take(rows))
+    unit = rows[frag]
+    units.add(
+        s.doc[unit], kind, text,
+        (s.off[unit], s.pos[unit], np.arange(len(unit), dtype=np.int64)), src=s.off[unit],
+    )
+
 
 
 def _e2(s: _Spans, pdf: np.ndarray, lay: dict, media: np.ndarray, units: _Rows) -> None:

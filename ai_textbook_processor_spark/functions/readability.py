@@ -271,46 +271,49 @@ def readability_features(texts: pd.Series, keywords: frozenset = frozenset()) ->
     return _features(*counts, index=texts.index)
 
 
+# The check values by code, and the ``reason`` of every (grade, safety,
+# relevance) code combination under strict and relaxed relevance.
+_GRADE_CHECKS = np.array(["TOO_LOW", "TOO_HIGH", GRADE_OK])
+_SAFETY_CHECKS = np.array(["INAPPROPRIATE", SAFETY_OK])
+_RELEVANCE_CHECKS = np.array([REL_MATCH, REL_PARTIAL, REL_MISMATCH])
+_REASONS = {
+    relaxed: np.array(
+        [
+            "ok" if g == 2 and s == 1 and r <= relaxed
+            else f"grade={grade};safety={safety};relevance={rel}"
+            for g, grade in enumerate(_GRADE_CHECKS)
+            for s, safety in enumerate(_SAFETY_CHECKS)
+            for r, rel in enumerate(_RELEVANCE_CHECKS)
+        ],
+        dtype=object,
+    )
+    for relaxed in (False, True)
+}
+
+
 def validate_features(
     feats: pd.DataFrame, cfg: CriteriaConfig
 ) -> pd.DataFrame:
     """Turn features into the ValidationResult-shaped check columns and
     ``is_valid`` (strict conjunction P6 / relaxed gate P7)."""
     fk = feats["fk_grade"].to_numpy()
-    grade_check = np.where(
-        fk < cfg.grade_lo, "TOO_LOW", np.where(fk > cfg.grade_hi, "TOO_HIGH", GRADE_OK)
-    )
-    safety_check = np.where(feats["_unsafe"].to_numpy(), "INAPPROPRIATE", SAFETY_OK)
-
+    grade = np.where(fk < cfg.grade_lo, 0, np.where(fk > cfg.grade_hi, 1, 2))
+    safety = np.where(feats["_unsafe"].to_numpy(), 0, 1)
     if cfg.keywords:
         ratios = feats["_kw_hits"].to_numpy() / len(cfg.keywords)
-        relevance = np.where(
-            ratios >= 0.5, REL_MATCH, np.where(ratios > 0, REL_PARTIAL, REL_MISMATCH)
-        )
+        rel = np.where(ratios >= 0.5, 0, np.where(ratios > 0, 1, 2))
+        relevance = _RELEVANCE_CHECKS[rel]
     else:
+        rel = np.zeros(len(feats), dtype=np.int64)
         relevance = np.full(len(feats), REL_MATCH, dtype=object)
 
-    rel_ok = (
-        np.isin(relevance, [REL_MATCH, REL_PARTIAL])
-        if cfg.relaxed_relevance
-        else (relevance == REL_MATCH)
-    )
-    is_valid = (grade_check == GRADE_OK) & (safety_check == SAFETY_OK) & rel_ok
-    detail = (
-        "grade="
-        + grade_check.astype(object)
-        + ";safety="
-        + safety_check.astype(object)
-        + ";relevance="
-        + np.asarray(relevance, dtype=object)
-    )
-    reason = np.where(is_valid, "ok", detail)
     out = feats[["fk_grade", "ttr", "n_words", "n_sentences"]].copy()
-    out["grade_check"] = grade_check
-    out["safety_check"] = safety_check
+    out["grade_check"] = _GRADE_CHECKS[grade]
+    out["safety_check"] = _SAFETY_CHECKS[safety]
     out["relevance_check"] = relevance
-    out["reason"] = reason
-    out["is_valid"] = is_valid
+    relaxed = bool(cfg.relaxed_relevance)
+    out["reason"] = _REASONS[relaxed][grade * 6 + safety * 3 + rel]
+    out["is_valid"] = (grade == 2) & (safety == 1) & (rel <= relaxed)
     return out
 
 

@@ -142,9 +142,9 @@ def _parser() -> argparse.ArgumentParser:
         help="clean-corpus: deterministic train/val/test fractions as "
         "'train=0.9,val=0.05,test=0.05' (hash of doc_id; leakage-safe "
         "because the dedup stages upstream already removed near-dups). "
-        "Alone it writes OUT/cleaned/split=<name> parquet; under "
-        "--resumable, or with --export-shards, it exports each split as "
-        "shards under OUT/shards/<name> (16 by default under --resumable)",
+        "Each split is exported as deterministic shards under "
+        "OUT/shards/<name> (16, or --export-shards N), with or without "
+        "--resumable",
     )
     ap.add_argument(
         "--export-shards",
@@ -198,6 +198,7 @@ def _clean_corpus(spark, docs, cfg, args, t0: float) -> dict:
     the in-session one; both take the same stage options."""
     from ai_textbook_processor_spark.plans.training_pipeline import (
         clean_corpus,
+        export_splits,
         run_clean_corpus,
     )
 
@@ -222,38 +223,11 @@ def _clean_corpus(spark, docs, cfg, args, t0: float) -> dict:
         return summary
 
     cleaned, funnel = clean_corpus(docs, cfg, **stage_kw)
-    cleaned = cleaned.drop("text")
     splits = None
     if args.split or args.export_shards:
-        from ai_textbook_processor_spark.operators.sampling import hash_split
-
-        fr = args.split or (("train", 1.0),)
-        final = cleaned.select("*", hash_split("doc_id", fr))
-        if args.export_shards:
-            from ai_textbook_processor_spark.operators.export import export_shards
-
-            splits = {}
-            for name, _frac in fr:
-                man = export_shards(
-                    final.where(F.col("split") == name).drop("split"),
-                    f"{args.out}/shards/{name}",
-                    n_shards=args.export_shards,
-                )
-                splits[name] = {
-                    "n_docs": sum(m["n_docs"] for m in man),
-                    "n_shards": len(man),
-                    "n_files": sum(m["n_files"] for m in man),
-                }
-        else:
-            final.write.mode("overwrite").partitionBy("split").parquet(
-                f"{args.out}/cleaned"
-            )
-            splits = {
-                r["split"]: {"n_docs": int(r["n"])}
-                for r in final.groupBy("split").agg(F.count("*").alias("n")).collect()
-            }
+        splits = export_splits(cleaned, args.out, args.split, args.export_shards)
     else:
-        cleaned.write.mode("overwrite").parquet(f"{args.out}/cleaned")
+        cleaned.drop("text").write.mode("overwrite").parquet(f"{args.out}/cleaned")
     wall = time.monotonic() - t0
     stages = {r["stage"]: int(r["n"]) for r in funnel.collect()}
     summary = {

@@ -396,40 +396,56 @@ def run_clean_corpus(
         r["stage"]: int(r["n"]) for r in funnel.collect()
     }
 
-    # optional durable tail: deterministic split + shard export.  The
-    # shard contents are a pure function of the cleaned ids, so a re-run
-    # would rewrite identical shards; the _MANIFEST.json marker turns
-    # that into an explicit no-op (resume semantics matching the commit
-    # tables), and Spark readers ignore underscore-prefixed files.
     if split_fractions or export_shards_n:
-        import json as _json
-        import os as _os
-
-        from ..operators.export import export_shards
-        from ..operators.sampling import hash_split
-
-        fr = split_fractions or (("train", 1.0),)
-        final = cleaned.drop("text").select("*", hash_split("doc_id", fr))
-        summary["splits"] = {}
-        for name, _frac in fr:
-            sdir = _os.path.join(out_root, "shards", name)
-            marker = _os.path.join(sdir, "_MANIFEST.json")
-            if _os.path.exists(marker):
-                with open(marker) as fh:
-                    man = _json.load(fh)
-                resumed = True
-            else:
-                man = export_shards(
-                    final.where(F.col("split") == name).drop("split"),
-                    sdir,
-                    n_shards=export_shards_n or 16,
-                )
-                with open(marker, "w") as fh:
-                    _json.dump(man, fh)
-                resumed = False
-            summary["splits"][name] = {
-                "n_docs": sum(m["n_docs"] for m in man),
-                "n_shards": len(man),
-                "resumed": resumed,
-            }
+        summary["splits"] = export_splits(
+            cleaned, out_root, split_fractions, export_shards_n, resume=True
+        )
     return summary
+
+
+def export_splits(
+    cleaned: DataFrame,
+    out_root: str,
+    split_fractions: tuple[tuple[str, float], ...] | None = None,
+    n_shards: int | None = None,
+    resume: bool = False,
+) -> dict:
+    """The split layout of ``job.py --clean-corpus``, in-session and
+    resumable alike: each split of ``cleaned`` (deterministic ``hash_split``
+    of ``doc_id``; one ``train`` split by default) exported as ``n_shards``
+    (default 16) deterministic shards under ``OUT/shards/<name>``, with
+    the verified manifest in ``_MANIFEST.json`` (Spark readers skip
+    underscore files). Shard contents are a pure function of the cleaned
+    ids, so with ``resume`` a split whose marker exists is read back from
+    it instead of rewritten. Returns ``{name: {n_docs, n_shards, n_files,
+    resumed}}``."""
+    import json
+    import os
+
+    from ..operators.export import export_shards
+    from ..operators.sampling import hash_split
+
+    fr = split_fractions or (("train", 1.0),)
+    final = cleaned.drop("text").select("*", hash_split("doc_id", fr))
+    splits = {}
+    for name, _frac in fr:
+        sdir = os.path.join(out_root, "shards", name)
+        marker = os.path.join(sdir, "_MANIFEST.json")
+        resumed = resume and os.path.exists(marker)
+        if resumed:
+            with open(marker) as fh:
+                man = json.load(fh)
+        else:
+            man = export_shards(
+                final.where(F.col("split") == name).drop("split"), sdir,
+                n_shards=n_shards or 16,
+            )
+            with open(marker, "w") as fh:
+                json.dump(man, fh)
+        splits[name] = {
+            "n_docs": sum(m["n_docs"] for m in man),
+            "n_shards": len(man),
+            "n_files": sum(m["n_files"] for m in man),
+            "resumed": resumed,
+        }
+    return splits

@@ -65,6 +65,20 @@ def udf_per_context(factory):
     return build
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set, else a
+    quarter of the host's RAM in whole GiB, at least 1g (the heap the
+    benchmark pins), so the default never exceeds the machine."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf: assume 16 GiB
+        ram = 16 << 30
+    return f"{max(1, ram // 4 >> 30)}g"
+
+
 def get_spark(
     app_name: str = "ai_textbook_processor_spark",
     master: str | None = None,
@@ -113,7 +127,7 @@ def get_spark(
             ),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
     )
     if effective.startswith("local"):
         # Local workers share the driver's files, so the daemon module is

@@ -10,15 +10,19 @@ byte guard that lets rows skip ``norm_text``.
 
 import sys
 
+import numpy as np
 import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ai_textbook_processor_spark.corpus import ALL_FAMILIES, gen_doc
+from ai_textbook_processor_spark.functions import kernels
 from ai_textbook_processor_spark.functions.columnar import (
+    OUT_KINDS,
     SPANS_ARROW_TYPE,
     TEXT_KINDS,
     extract_batch,
+    extract_html_batch,
     norm_unchanged,
     normalize,
 )
@@ -224,3 +228,226 @@ def test_udf_body_takes_arrow_or_pandas_cells():
     arr = pa.array(cells + [None], SPANS_ARROW_TYPE)
     func = make_extract_and_score_udf(CriteriaConfig()).func
     assert func(arr.to_pandas()).to_pylist() == func(arr).to_pylist()
+
+
+# -- batch E1 ------------------------------------------------------------------
+
+
+def _e1_by_fragment(fragments):
+    """``extract_html_batch`` regrouped per fragment as the kernel's
+    [(kind, text)] lists; its fragment column must be in order."""
+    frag, kind, text = extract_html_batch(pa.array(fragments, pa.string()))
+    assert (np.diff(frag) >= 0).all()
+    out = [[] for _ in fragments]
+    for f, k, t in zip(frag.tolist(), kind.tolist(), text.to_pylist()):
+        out[f].append((OUT_KINDS[k], t))
+    return out
+
+
+def _assert_e1_equal(fragments):
+    got = _e1_by_fragment(fragments)
+    for i, html in enumerate(fragments):
+        assert got[i] == kernels.extract_html_fragment(html), repr(html)
+
+
+def _fallback_fragments(fragments, monkeypatch) -> list:
+    """The fragments of one ``extract_html_batch`` call that went to the
+    kernel."""
+    seen = []
+    real = kernels.extract_html_fragment
+
+    def recording(html):
+        seen.append(html)
+        return real(html)
+
+    monkeypatch.setattr(kernels, "extract_html_fragment", recording)
+    _e1_by_fragment(fragments)
+    monkeypatch.setattr(kernels, "extract_html_fragment", real)
+    return seen
+
+
+def _html_fragments(cells):
+    return [sp["text"] for c in cells for sp in c if sp["kind"] == "html"]
+
+
+def test_e1_on_every_corpus_family_and_seed(monkeypatch):
+    fragments = _html_fragments(
+        gen_doc(idx, seed, family=fam)["spans"]
+        for seed in (1, 42, 99)
+        for fam in ALL_FAMILIES
+        for idx in range(4)
+    )
+    assert len(fragments) > 50
+    _assert_e1_equal(fragments)
+    # the generated HTML is all on the fast path
+    assert _fallback_fragments(fragments, monkeypatch) == []
+
+
+def test_e1_on_the_adversarial_fragments():
+    from test_fast_html import _GRAMMAR_PIECES, NASTY
+
+    _assert_e1_equal(NASTY)
+    _assert_e1_equal(_GRAMMAR_PIECES + ["".join(_GRAMMAR_PIECES)])
+
+
+@settings(max_examples=120, deadline=None, derandomize=True)
+@given(
+    st.lists(
+        st.text(alphabet=st.sampled_from(list("<>/&;#abcdep!?-=\"' \né中")), max_size=200),
+        max_size=6,
+    )
+)
+def test_e1_on_fuzzed_text(fragments):
+    _assert_e1_equal(fragments)
+
+
+def test_e1_on_the_goldens(monkeypatch):
+    """Every fragment the hand-written E1 goldens pass to the kernel."""
+    import test_kernels_golden as golden
+
+    seen = []
+    real = golden.extract_html_fragment
+    monkeypatch.setattr(golden, "extract_html_fragment", lambda h: seen.append(h) or real(h))
+    for cls in (golden.TestHtmlKernel, golden.TestHtmlEdgeCases):
+        for name in dir(cls):
+            if name.startswith("test_"):
+                getattr(cls(), name)()
+    monkeypatch.undo()
+    assert len(seen) >= 10
+    _assert_e1_equal(seen)
+
+
+# Nested HTML: every tag class the tree rules test, attributes in the strict
+# grammar, pinned entities, voids, Unicode and whitespace, texts on both
+# sides of the vote and link-density thresholds. One fragment in four also
+# draws from constructs the fast path hands to the kernel (raw text,
+# comments, other entities, attributes outside the grammar, stray and
+# missing end tags); implied ends arise from the nesting itself.
+_E1_TAGS = sorted(
+    (kernels._BLOCK_TAGS | kernels._BOILERPLATE_TAGS | kernels._P_CLOSERS)
+    - set(kernels._RAWTEXT_TAGS) - {"p"}
+) + ["a", "b", "span", "tr", "x-y", "DIV", "Li"] + 4 * ["div", "article", "a", "b"]
+_E1_LEAF_TAGS = ["p", "h1", "h3", "figcaption", "caption", "pre", "td", "li", "a", "b", "P"]
+_E1_ATTRS = ["", "", "", "", ' class="x"', " id=main", ' href="/p?q=1&amp;r=2"',
+             " data-x", " a=\"1\" b='2'", "\t\nclass = 'y' "]
+_E1_WORDS = ["the green plant uses sunlight and water to produce its food",
+             "energy moves between living systems in a constant natural cycle " * 2,
+             "minerals travel upward through narrow channels inside the stem " * 5,
+             "café naïve 北京", "🙂", "x", "&amp;", "&lt;", "&nbsp;", "&#39;", "&quot;",
+             "&gt;", "  ", "\n\t"]
+_E1_VOIDS = ["<br>", "<img src='a.png'>", "<BR>", "<hr>", "</br>", ""]
+_E1_NOISE = {
+    "attrs": [" title='a > b'", ' a="x"y', " a=b/", "@x"],
+    "words": ["&eacute;", "& ", "a<b"],
+    "voids": ["<br/>", "<!-- c -->", "<script>x</script>", "<?pi?>", "</p>"],
+    "closes": ["p", None],
+}
+
+
+def _e1_html(noisy: bool):
+    def pick(values, kind):
+        return st.sampled_from(values + (_E1_NOISE[kind] if noisy else []))
+
+    attrs = pick(_E1_ATTRS, "attrs")
+    text = st.lists(pick(_E1_WORDS, "words"), min_size=1, max_size=3).map(" ".join)
+    leaves = st.one_of(text, pick(_E1_VOIDS, "voids"))
+
+    @st.composite
+    def block(draw):  # a leaf-ish element around text: where votes come from
+        tag = draw(st.sampled_from(_E1_LEAF_TAGS))
+        inner = "".join(draw(st.lists(leaves, min_size=1, max_size=3)))
+        return f"<{tag}{draw(attrs)}>{inner}</{tag}>"
+
+    @st.composite
+    def element(draw, children):
+        tag = draw(st.sampled_from(_E1_TAGS))
+        inner = "".join(draw(st.lists(st.one_of(children, block()), max_size=5)))
+        close = draw(pick(4 * [tag] + [tag.upper()], "closes"))
+        return f"<{tag}{draw(attrs)}>{inner}" + ("" if close is None else f"</{close}>")
+
+    return st.recursive(st.one_of(leaves, block()), element, max_leaves=24)
+
+
+_E1_HTML = st.one_of(_e1_html(False), _e1_html(False), _e1_html(False), _e1_html(True))
+
+
+@settings(max_examples=400, deadline=None, derandomize=True)
+@given(st.lists(_E1_HTML, min_size=1, max_size=6))
+def test_e1_on_fuzzed_nested_html(fragments):
+    _assert_e1_equal(fragments)
+
+
+_CLEAN = (
+    "<article><h2>Title here</h2><p>" + "plain words of a paragraph " * 3 + "</p>{}"
+    "<p>" + "another paragraph with <a href='/x'>a link</a> inside it " * 2 + "</p></article>"
+)
+# constructs the fast path reads itself
+_FAST = [
+    "", "plain text", "<br>", "<BR>", "<img src=x.png>", "<hr >", "</br>", "&amp;",
+    "&lt;&gt;&quot;&#39;&nbsp;", "&amp;lt;", "<span class='x' id=\"y\">s</span>",
+    "<b\ttitle = 'a'\n>b</b>", "<a href='x\"y'>q</a>", "<x-y>z</x-y>",
+    "<DIV>u</div>", "<blockquote>bq</blockquote>", "<nav><p>skip</p></nav>",
+    "<p>in p <b>bold</b> and <a>link</a></p>", "<ul><li>one</li><li>two</li></ul>",
+]
+# constructs that send the whole fragment to the kernel
+_BAIL = [
+    "<p>x<div>y</div></p>", "<li>a<li>b</li></li>", "<td><th>c</th></td>",
+    "<tr><tr>r</tr></tr>", "<p>unclosed", "<div>x</p></div>", "</span>",
+    "<script>s</script>", "<style>p{}</style>", "<SCRIPT>s</SCRIPT>", "<!-- c -->",
+    "<!DOCTYPE html>", "<![CDATA[x]]>", "<?pi?>", "&bad;", "&amp", "&#65;", "&eacute;",
+    "a & b", "&lt", "<a b=\"x\"y>q</a>", "<a foo=a\"b\">q</a>", "<br/>",
+    "<img src=x />", "<a href=x/>q</a>", "<a@x>q</a@x>", "<p\"x\">q</p>",
+    "<abcdefghijk>q</abcdefghijk>", "</div class=x>", "1 < 2", "<2", "<",
+    "<div title=\"a > b\">t</div>", "<div title=\"a<b\">t</div>", "<p/>",
+]
+
+
+def test_e1_bail_set(monkeypatch):
+    """Each bail construct sends its fragment, and only it, to the kernel;
+    each fast construct stays on the fast path."""
+    fast = [_CLEAN.format(c) for c in _FAST]
+    bail = [_CLEAN.format(c) for c in _BAIL]
+    assert _fallback_fragments(fast, monkeypatch) == []
+    for html in bail:
+        assert _fallback_fragments([fast[0], html, fast[1]], monkeypatch) == [html]
+    _assert_e1_equal(fast + bail)
+
+
+def test_e1_implied_ends_exhaustive(monkeypatch):
+    """For every (open element, tag opened inside it) pair of the names the
+    tree rules test, the fragment goes to the kernel exactly when the
+    kernel's tree builder would close the element first."""
+    names = sorted(
+        kernels._BLOCK_TAGS | kernels._P_CLOSERS | {"li", "td", "th", "tr", "a", "span"}
+    )
+    fragments, implied = [], []
+    for outer in names:
+        for inner in names:
+            builder = kernels._DomBuilder()
+            builder._push(outer)
+            builder._implied_end(inner)
+            implied.append(len(builder._stack) == 1)
+            fragments.append(
+                f"<div><{outer}><{inner}>{'words in the inner element ' * 2}</{inner}>"
+                f"</{outer}></div>"
+            )
+    assert any(implied) and not all(implied)
+    seen = set(_fallback_fragments(fragments, monkeypatch))
+    assert [f in seen for f in fragments] == implied
+    _assert_e1_equal(fragments)
+
+
+def test_e1_mixed_batch_keeps_fragment_order(monkeypatch):
+    clean = [_CLEAN.format(c) for c in _FAST[:4]]
+    bail = [_CLEAN.format(c) for c in _BAIL[:4]]
+    batch = [bail[0], clean[0], clean[1], bail[1], bail[2], clean[2], "", bail[3], clean[3]]
+    assert _fallback_fragments(batch, monkeypatch) == bail
+    frag, _kind, _text = extract_html_batch(pa.array(batch))
+    assert sorted(set(frag.tolist())) == [0, 1, 2, 3, 4, 5, 7, 8]
+    _assert_e1_equal(batch)
+    # the same from a sliced array
+    whole = extract_html_batch(pa.array(batch))
+    sliced = extract_html_batch(pa.array(["<p>x</p>"] + batch).slice(1))
+    assert [whole[0].tolist(), whole[1].tolist(), whole[2].to_pylist()] == [
+        sliced[0].tolist(), sliced[1].tolist(), sliced[2].to_pylist()
+    ]

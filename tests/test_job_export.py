@@ -89,3 +89,55 @@ def test_resumable_clean_corpus_export_resumes(tmp_path):
         k: v["n_docs"] for k, v in first["splits"].items()
     }
     assert second["funnel"] == first["funnel"]
+
+
+def test_split_layout_is_one_for_both_modes(spark, tmp_path):
+    """``--split`` writes the same files and reports the same per-split
+    summary in-session and under ``--resumable``, on the same 240 docs."""
+    import time
+
+    import pyarrow.parquet as pq
+
+    from ai_textbook_processor_spark import job
+    from ai_textbook_processor_spark.corpus import corpus_df
+
+    def run(out, *extra):
+        ap = job._parser()
+        args = ap.parse_args([
+            "--n-docs", "240", "--out", out, "--clean-corpus", "--min-quality", "0.0",
+            "--grade-lo", "-100", "--grade-hi", "100", "--split", "train=0.8,val=0.2",
+            *extra,
+        ])
+        job._check_flags(ap, args)
+        docs = corpus_df(spark, args.n_docs, seed=args.seed, mega_every=args.mega_every)
+        cfg = job.CriteriaConfig(grade_lo=args.grade_lo, grade_hi=args.grade_hi)
+        return job._clean_corpus(spark, docs, cfg, args, time.monotonic())
+
+    def layout(out):
+        """Per shard directory: its manifest or its rows, sorted."""
+        root = os.path.join(out, "shards")
+        found = {}
+        for d, _dirs, files in os.walk(root):
+            rel = os.path.relpath(d, root)
+            for f in files:
+                if f == "_MANIFEST.json":
+                    with open(os.path.join(d, f)) as fh:
+                        found[(rel, f)] = json.load(fh)
+            parts = [f for f in files if f.endswith(".parquet")]
+            if parts:
+                assert len(parts) == 1, (d, parts)
+                rows = pq.read_table(os.path.join(d, parts[0])).to_pylist()
+                found[(rel, "rows")] = sorted(rows, key=lambda r: r["doc_id"])
+        return found
+
+    in_session = run(str(tmp_path / "session"))
+    resumable = run(str(tmp_path / "durable"), "--resumable", "split-run")
+    assert set(in_session["splits"]) == {"train", "val"}
+    assert in_session["splits"] == resumable["splits"]
+    assert all(0 < s["n_shards"] <= 16 for s in in_session["splits"].values())  # non-empty
+    files = layout(str(tmp_path / "session"))
+    assert files == layout(str(tmp_path / "durable"))
+    assert sum(len(v) for k, v in files.items() if k[1] == "rows") == sum(
+        s["n_docs"] for s in in_session["splits"].values()
+    )
+    assert not os.path.exists(tmp_path / "session" / "cleaned")

@@ -206,3 +206,66 @@ def test_oracle_sql_byte_identical():
         pytest.skip("sf0.01 test data not present")
     assert len(oracles) == 113
     assert _digest(oracles) == ORACLE_SQL_SHA256
+
+
+def _validate_by_concatenation(feats: pd.DataFrame, cfg: rd.CriteriaConfig) -> pd.DataFrame:
+    """The check columns as defined: ``reason`` concatenated per row."""
+    fk = feats["fk_grade"].to_numpy()
+    grade_check = np.where(
+        fk < cfg.grade_lo, "TOO_LOW", np.where(fk > cfg.grade_hi, "TOO_HIGH", rd.GRADE_OK)
+    )
+    safety_check = np.where(feats["_unsafe"].to_numpy(), "INAPPROPRIATE", rd.SAFETY_OK)
+    if cfg.keywords:
+        ratios = feats["_kw_hits"].to_numpy() / len(cfg.keywords)
+        relevance = np.where(
+            ratios >= 0.5, rd.REL_MATCH, np.where(ratios > 0, rd.REL_PARTIAL, rd.REL_MISMATCH)
+        )
+    else:
+        relevance = np.full(len(feats), rd.REL_MATCH, dtype=object)
+    rel_ok = (
+        np.isin(relevance, [rd.REL_MATCH, rd.REL_PARTIAL])
+        if cfg.relaxed_relevance
+        else (relevance == rd.REL_MATCH)
+    )
+    is_valid = (grade_check == rd.GRADE_OK) & (safety_check == rd.SAFETY_OK) & rel_ok
+    detail = (
+        "grade=" + grade_check.astype(object) + ";safety=" + safety_check.astype(object)
+        + ";relevance=" + np.asarray(relevance, dtype=object)
+    )
+    out = feats[["fk_grade", "ttr", "n_words", "n_sentences"]].copy()
+    out["grade_check"] = grade_check
+    out["safety_check"] = safety_check
+    out["relevance_check"] = relevance
+    out["reason"] = np.where(is_valid, "ok", detail)
+    out["is_valid"] = is_valid
+    return out
+
+
+@pytest.mark.parametrize("relaxed", [False, True])
+@pytest.mark.parametrize("keywords", [frozenset(), frozenset({"a", "b", "c", "d"})])
+def test_reason_table_every_combination(relaxed, keywords):
+    """Every (grade, safety, relevance) combination, at and around the band
+    edges and with a NaN grade: the table-built columns equal the
+    concatenated ones."""
+    rows = [
+        (fk, unsafe, hits)
+        for fk in (-5.0, 0.999, 1.0, 6.0, 12.0, 12.001, 40.0, np.nan)
+        for unsafe in (False, True)
+        for hits in (0, 1, 2, 4)
+    ]
+    feats = pd.DataFrame(
+        {
+            "fk_grade": [r[0] for r in rows],
+            "ttr": 0.5,
+            "n_words": 10,
+            "n_sentences": 2,
+            "_unsafe": [r[1] for r in rows],
+            "_kw_hits": [r[2] for r in rows],
+        }
+    )
+    cfg = rd.CriteriaConfig(relaxed_relevance=relaxed, keywords=keywords)
+    got = rd.validate_features(feats, cfg)
+    assert_identical(got, _validate_by_concatenation(feats, cfg))
+    assert [type(r) for r in got["reason"]] == [str] * len(rows)
+    n_relevance = 3 if keywords else 1
+    assert got["reason"].nunique() == 3 * 2 * n_relevance - (2 if relaxed and keywords else 1) + 1

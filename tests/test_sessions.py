@@ -5,7 +5,8 @@ A pandas UDF keeps the JVM function it builds on first use, with the
 accumulator of the SparkContext active then; a UDF memoized across
 sessions makes every task of the second session fail its accumulator
 update, which the DAGScheduler logs. The sessions run in a child process,
-so its JVM's log can be read back."""
+so its JVM's log can be read back. Also: the session factory's default
+driver heap fits the host."""
 
 import json
 import os
@@ -60,3 +61,26 @@ def test_second_session_output_equal_and_no_accumulator_error():
     result = json.loads(proc.stdout.strip().splitlines()[-1])
     assert result == {"n": 24, "equal": True}
     assert "Failed to update accumulator" not in proc.stderr
+
+
+def test_driver_memory_default_is_a_quarter_of_ram(monkeypatch):
+    from ai_textbook_processor_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    sysconf = {"SC_PAGE_SIZE": 4096}
+    monkeypatch.setattr(session.os, "sysconf", lambda name: sysconf[name])
+    for ram_bytes, want in [
+        (15 * 2**30 + 2**29, "3g"),  # 15.5 GiB
+        (16 * 2**30, "4g"),
+        (3 * 2**30, "1g"),  # never below 1g
+        (256 * 2**30, "64g"),
+    ]:
+        sysconf["SC_PHYS_PAGES"] = ram_bytes // 4096
+        assert session.driver_memory() == want
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "7g")
+    assert session.driver_memory() == "7g"
+    monkeypatch.undo()
+    with open("/proc/meminfo") as f:  # the benchmark's reading of the same RAM
+        kb = int(next(line for line in f if line.startswith("MemTotal")).split()[1])
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert session.driver_memory() == f"{max(1, int(kb / (1 << 20) // 4))}g"
