@@ -3,12 +3,16 @@
 ``extract_batch(spans)`` returns exactly ``[kernels.extract_document(c) for
 c in cells]`` (a null cell gives ``[]``), as one Arrow list array, plus each
 document's joined text for E4. It never builds a Python object per span:
-span dispatch, ``norm_text``, E2 layout ordering and classification, unit
-ordering, E3 media placement and the cumulative offsets are Arrow compute
-and numpy operations over the flattened batch. What stays per row, calling
-the unchanged per-document kernels:
+span dispatch, ``norm_text``, E1 (``extract_html_batch``), E2 layout
+ordering and classification, unit ordering, E3 media placement and the
+cumulative offsets are Arrow compute and numpy operations over the
+flattened batch. What stays per row, calling the unchanged per-document
+kernels:
 
-* E1: ``kernels.extract_html_fragment`` once per HTML fragment;
+* ``kernels.extract_html_fragment`` on the HTML fragments whose tree the
+  batch E1 cannot prove it builds the same way (implied ends, mismatched or
+  unclosed tags, raw text, comments, other character references, tags the
+  kernel's tokenizer reads differently);
 * ``kernels.norm_text`` on the rows a byte scan cannot prove it leaves
   unchanged (non-ASCII, or whitespace other than single interior spaces);
 * ``kernels.parse_layout_token`` on the layout tokens the ASCII pattern

@@ -23,9 +23,11 @@ and the golden tests call them, and they are pinned by hand-written
 expected outputs in tests/. The Spark hot paths (the column Arrow UDF and
 the fused stage in operators/extract.py) run the columnar batch core
 (functions/columnar.py) instead, which applies the same rules to a whole
-Arrow batch and calls E1 here once per HTML fragment. Its equality with
-these kernels holds by test (tests/test_columnar.py: property tests and
-every corpus family), not by construction.
+Arrow batch, E1 included; it calls ``extract_html_fragment`` here only for
+the HTML fragments its batch E1 cannot prove it reads the same way. Its
+equality with these kernels holds by test (tests/test_columnar.py: property
+tests, fuzzed HTML, the adversarial fragments and every corpus family), not
+by construction.
 
 Every function here is pure: no wall clock, no randomness, no I/O.
 Text is NFC-normalized and whitespace-collapsed for byte-stable goldens

@@ -72,10 +72,7 @@ def driver_memory() -> str:
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if mem:
         return mem
-    try:
-        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    except (AttributeError, ValueError, OSError):  # no sysconf: assume 16 GiB
-        ram = 16 << 30
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{max(1, ram // 4 >> 30)}g"
 
 

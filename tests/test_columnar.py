@@ -5,7 +5,11 @@
 of a batch, and each document's joined E4 text. Covered here: random
 batches built to hit every dispatch branch and per-row fallback, every
 corpus family at three seeds, and an exhaustive code-point check of the
-byte guard that lets rows skip ``norm_text``.
+byte guard that lets rows skip ``norm_text``. The batch E1,
+``extract_html_batch``, must return exactly ``kernels.extract_html_fragment``
+of every fragment: on every corpus family, fuzzed nested HTML, the
+adversarial fragments of test_fast_html and the E1 goldens; which fragments
+it hands to the kernel is pinned construct by construct.
 """
 
 import sys
